@@ -78,12 +78,8 @@ class DedupConfig:
     # --- execution ---
     shuffle_partitions: int = 32
     arrow_batch_rows: int = 4096          # bounded Arrow batches for image decode UDFs
-    cc_max_iters: int = 50                # connected-components safety bound
-    checkpoint_every: int = 1             # CC: rounds per lazy batch between
-                                          # convergence checks (dedup graphs
-                                          # are star-shaped and converge in
-                                          # 1-2 rounds; raise for deep graphs
-                                          # to amortize the per-batch job)
+    cc_max_iters: int = 50                # connected components: propagation
+                                          # rounds allowed after round 0
 
     def __post_init__(self) -> None:
         assert self.minhash_perms == self.lsh_bands * self.lsh_rows

@@ -6,21 +6,26 @@ as iterative min-label propagation expressed purely as DataFrame joins:
 
     label(v) <- min(label(v), min_{(u,v) in E} label(u))
 
-with three scale guards (SURVEY.md §7.4 hard part #1):
-  * edges are canonicalized + deduplicated once, then cached;
-  * propagation rounds run in LAZY batches of cfg.checkpoint_every: the
-    label frontier is only checkpointed + convergence-checked once per
-    batch, so the driver pays ONE job per batch instead of two per round.
-    Labels are monotone non-increasing, so an unchanged order-invariant
-    checksum across a whole batch proves a fixed point (on a cluster:
-    df.checkpoint() to HDFS / an Iceberg snapshot — see plans/checkpoint.py);
-  * dedup graphs are star-shaped (tiers emit star edges around bucket
-    minima), so they converge in 1-2 propagation rounds: the common case is
-    exactly two driver actions total;
-  * from the second batch on (i.e. only when the star-shaped fast path did
-    NOT converge), each round adds a pointer-doubling shortcut
-    label(v) <- label(label(v)), bounding high-diameter graphs (chains of
-    drifting near-dups) at O(log n) rounds instead of O(diameter).
+Round 0 is fused into label construction (one union+groupBy, no join).
+After it and after every later round, ONE job counts the edges whose
+endpoints carry different labels; the loop stops at 0. The test is exact:
+every label is an id from its node's component and <= the node's id, so
+"all edges agree" means each component carries its minimum id. Star-shaped
+dedup graphs (tiers emit star edges around bucket minima) thus stop right
+after round 0, and a deep graph stops in the round it settles. From the
+second propagation round on, a pointer-doubling shortcut
+label(v) <- label(label(v)) bounds high-diameter graphs (chains of drifting
+near-dups) at O(log n) rounds instead of O(diameter). cfg.cc_max_iters
+bounds the rounds after round 0; 0 is legal.
+
+The symmetric edge set and each round's labels are eager localCheckpoints,
+so every query in the loop plans against a leaf, not a growing lineage.
+When the loop ends, all of them are released except the final labels,
+which the lazy output reads.
+
+Fault model: checkpointed edges and labels live in executor storage with
+no lineage, so they are not recomputable after executor loss and the query
+fails. Cluster runs should commit stages through plans/checkpoint.py.
 
 Determinism: labels are min(image_id) of the component — reproducing the
 reference's deterministic winner rule (scan-order last-wins,
@@ -69,6 +74,24 @@ def _shortcut(labels: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+def _disagreements(edges: DataFrame, labels: DataFrame, id_col: str) -> int:
+    """Count the edges whose endpoints carry different labels (each once)."""
+    la = labels.select(F.col(id_col).alias("id_a"), F.col("label").alias("_la"))
+    lb = labels.select(F.col(id_col).alias("id_b"), F.col("label").alias("_lb"))
+    return (
+        edges.where(F.col("id_a") < F.col("id_b"))
+        .join(la, "id_a")
+        .join(lb, "id_b")
+        .where(F.col("_la") != F.col("_lb"))
+        .count()
+    )
+
+
+def _release(checkpointed: DataFrame) -> None:
+    """Unpersist the RDD behind a localCheckpoint'ed frame."""
+    checkpointed._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame | None = None,
@@ -84,60 +107,34 @@ def connected_components(
         pairs.select("id_a", "id_b")
         .unionByName(pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")))
         .distinct()
-        .persist()
+        .localCheckpoint()
     )
-    # round 0 fused into label construction: label(v) = min(v, neighbors)
-    # via ONE union+groupBy — no join (star-shaped tiers converge right here)
-    labels = (
-        edges.select(F.col("id_a").alias(id_col), F.col("id_b").alias("label"))
-        .unionByName(edges.select(F.col("id_a").alias(id_col),
-                                  F.col("id_a").alias("label")))
-        .groupBy(id_col)
-        .agg(F.min("label").alias("label"))
-    )
-
-    # Lazy-batched iteration: every round ends in a LAZY localCheckpoint —
-    # nothing runs yet, but the checkpoint makes round N+1 reference round
-    # N's RDD *structurally* (computed once at materialization) instead of
-    # duplicating its Catalyst plan (a union references labels twice; without
-    # the per-round checkpoint the physical plan doubles every round and AQE
-    # re-executes the duplicated subtrees). The driver then pays ONE job per
-    # `batch` rounds: the convergence-checksum action, which materializes
-    # the whole checkpointed chain.
-    batch = max(1, cfg.checkpoint_every)
-    prev_state: tuple = ()
-    it = 0
-    converged = False
-    labels = labels.localCheckpoint(eager=False)
-    while it < cfg.cc_max_iters:
-        for _ in range(min(batch, cfg.cc_max_iters - it)):
-            labels = _propagate(edges, labels, id_col)
-            if it >= batch:
-                # Pointer doubling from the second batch on: star-shaped
-                # dedup graphs have already converged by then (no extra
-                # shuffle in the common case), while high-diameter graphs
-                # (chains of drifting near-dups A~B~C~...) get O(log n)
-                # rounds instead of O(diameter) — each round the reach of
-                # a label at least doubles, vs +1 for propagation alone.
-                labels = _shortcut(labels, id_col)
-            labels = labels.localCheckpoint(eager=False)
-            it += 1
-        # order-invariant checksum of the assignment; labels only ever
-        # decrease, so (count, sum) unchanged across a batch <=> fixed point
-        row = labels.agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64(F.concat_ws("\x1f", id_col, "label"))
-                  .cast("decimal(38,0)")).alias("s"),  # decimal: no ANSI overflow
-        ).first()
-        state = (row["n"], row["s"])
-        if state == prev_state:
-            converged = True
-            break
-        prev_state = state
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {cfg.cc_max_iters} iters"
+    try:
+        # round 0: label(v) = min(v, neighbors) via ONE union+groupBy
+        labels = (
+            edges.select(F.col("id_a").alias(id_col), F.col("id_b").alias("label"))
+            .unionByName(edges.select(F.col("id_a").alias(id_col),
+                                      F.col("id_a").alias("label")))
+            .groupBy(id_col)
+            .agg(F.min("label").alias("label"))
+            .localCheckpoint()
         )
+        rounds = 0
+        while _disagreements(edges, labels, id_col):
+            if rounds == cfg.cc_max_iters:
+                _release(labels)
+                raise RuntimeError(
+                    f"connected_components did not converge in {rounds} rounds"
+                )
+            nxt = _propagate(edges, labels, id_col)
+            if rounds:  # a graph still unsettled after round 1 is deep
+                nxt = _shortcut(nxt, id_col)
+            nxt = nxt.localCheckpoint()
+            _release(labels)
+            labels = nxt
+            rounds += 1
+    finally:
+        _release(edges)
 
     out = labels.select(F.col(id_col), F.col("label").alias("cluster_id"))
     if nodes is not None:
@@ -146,7 +143,6 @@ def connected_components(
             .join(out, id_col, "left")
             .select(id_col, F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"))
         )
-    edges.unpersist()
     return out
 
 

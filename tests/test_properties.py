@@ -109,7 +109,7 @@ def test_chain_graph_converges_in_log_rounds(spark):
     ids = [f"c{n - i:04d}" for i in range(n)]  # ids decrease along the path
     pairs = spark.createDataFrame(
         list(zip(ids, ids[1:])), "id_a string, id_b string")
-    cfg = DedupConfig(cc_max_iters=14, checkpoint_every=1)
+    cfg = DedupConfig(cc_max_iters=14)
     out = connected_components(pairs, cfg=cfg).collect()
     assert len(out) == n
     assert {r["cluster_id"] for r in out} == {"c0001"}
