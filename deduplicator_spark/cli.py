@@ -34,8 +34,7 @@ Subcommands:
             in-stream dedup over a file-arrival directory: the SHARDED
             stateful operators (the engine defaults) through the
             exactly-once foreachBatch sink, availableNow per invocation
-            (re-runs process only NEW files); --fine for the per-key
-            semantic-reference variants
+            (re-runs process only NEW files)
 """
 
 from __future__ import annotations
@@ -188,14 +187,16 @@ def cmd_stream_dedup(args) -> int:
     once through the checkpointed exactly-once sink, then the command
     exits via availableNow; re-running picks up only NEW files).
 
-    Routes to the SHARDED stateful operators by default — the documented
-    engine defaults (5.3x/2.4x the fine-grained ingest at row-identical
-    output, 2v8 scaling 0.988; BENCH/STREAM_E2E_SHARDED.md) — with
-    --fine opting into the per-key semantic-reference variants.
+    Runs the SHARDED stateful operators — the documented engine defaults
+    (5.3x/2.4x the per-key reference variants' ingest at row-identical
+    output, 2v8 scaling 0.988; BENCH/STREAM_E2E_SHARDED.md).
 
     Operators:
       stats    per-digest running dup statistics over captures
-               (record_id, digest, ts) — update-mode running totals
+               (record_id, digest, ts). Update mode: data/ holds one row
+               per digest per micro-batch that touched it, each a running
+               total, so a digest seen in k micro-batches has k rows. The
+               deduplicated answer is the latest row per digest (max n_seen)
       neardup  in-stream pHash near-dup (no prior index) over images
                (image_id, phash, ts) — one row per (arrival, band)
     """
@@ -208,20 +209,19 @@ def cmd_stream_dedup(args) -> int:
     stream = read_capture_stream(spark, args.input, schema,
                                  max_files_per_trigger=args.max_files)
     if args.operator == "stats":
-        fn = st.streaming_dup_stats if args.fine else st.dup_stats
-        mode = "update"   # running totals re-emit per micro-batch
+        fn, mode = st.dup_stats, "update"   # running totals per micro-batch
     else:
-        fn = st.streaming_neardup_dedup if args.fine else st.neardup_dedup
-        mode = "append"   # one immutable row per (arrival, band)
+        fn, mode = st.neardup_dedup, "append"  # one row per (arrival, band)
     out = fn(stream, watermark=args.watermark)
     ckpt = args.checkpoint_dir or f"{args.output}/_ckpt"
     q = write_exactly_once(out, args.output, ckpt, output_mode=mode)
     q.awaitTermination()
     rows = read_committed(spark, args.output)
-    n = rows.count()
-    variant = "fine" if args.fine else "sharded"
-    print(f"  operator        {args.operator} ({variant})")
-    print(f"  committed rows  {n} -> {args.output}/data")
+    print(f"  operator        {args.operator}")
+    print(f"  committed rows  {rows.count()} -> {args.output}/data")
+    if args.operator == "stats":
+        print("  rows are per-micro-batch running totals; the deduplicated"
+              " answer is the latest row per digest (max n_seen)")
     return 0
 
 
@@ -353,8 +353,7 @@ def main(argv: list[str] | None = None) -> int:
     pd = sub.add_parser(
         "stream-dedup",
         help="in-stream dedup over a file-arrival directory (exactly-once "
-             "sink; SHARDED stateful operators by default, --fine for the "
-             "per-key reference variants)")
+             "sink, SHARDED stateful operators)")
     pd.add_argument("--input", required=True,
                     help="directory of arriving parquet files")
     pd.add_argument("--output", required=True,
@@ -362,10 +361,12 @@ def main(argv: list[str] | None = None) -> int:
     pd.add_argument("--checkpoint-dir",
                     help="stream checkpoint (default <output>/_ckpt)")
     pd.add_argument("--operator", choices=("stats", "neardup"),
-                    default="stats")
-    pd.add_argument("--fine", action="store_true",
-                    help="per-key state variants (semantic reference; "
-                         "sharded is the default and the fast path)")
+                    default="stats",
+                    help="stats: per-digest running totals in update mode, "
+                         "so data/ holds one row per digest per micro-batch "
+                         "that touched it; the deduplicated answer is the "
+                         "latest row per digest (max n_seen). neardup: one "
+                         "row per (arrival, band)")
     pd.add_argument("--watermark", default="2 hours")
     pd.add_argument("--max-files", type=int, default=None,
                     help="maxFilesPerTrigger (micro-batch size control)")

@@ -258,8 +258,3 @@ def banded_from_prepared(prepared: DataFrame) -> DataFrame:
     return prepared.select(
         "image_id", F.posexplode("band_keys").alias("band", "key")
     )
-
-
-def minhash_banded_arrow(images: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame:
-    """(image_id, band, key) — exploded LSH band keys via the batched path."""
-    return banded_from_prepared(prepared_features(images, cfg))

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, DedupConfig
-from ..functions.hashing import hamming64, phash_band_keys, simhash64, tokens
+from ..functions.hashing import hamming64, phash_band_keys
 from .candidates import candidate_pairs_from_bands
 
 
@@ -47,13 +47,6 @@ def near_image_pairs(images: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame
         F.lit("near_image").alias("tier"),
         F.col("hamming").cast("double").alias("score"),
     )
-
-
-def with_caption_simhash(images: DataFrame) -> DataFrame:
-    """64-bit SimHash over caption tokens (secondary text signature; the
-    north star's 'SimHash over perceptual-hash bitplanes' is phash_banded —
-    this is the same operator applied to text features)."""
-    return images.withColumn("caption_simhash", simhash64(tokens(F.col("caption"))))
 
 
 def simhash_features(items: DataFrame, id_col: str = "item_id",

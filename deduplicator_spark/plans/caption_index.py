@@ -12,15 +12,17 @@ DIGEST_URL_PREFERRED (LuceneIndexSearcher.java:131-170):
   3. else                                       -> verdict 'novel'
 
 Scale shape: the index stores ONE prepared-features row per caption
-(sh_hashes + band_keys from one Arrow pass — no re-shingling at probe time);
-the exact leg is a digest equi-join; the near leg is a banded equi-join that
-shuffles only the increment when the index is stored bucketed by (band, key)
-(plans/bucketed.py). Identical-caption index entries collapse to one
-representative before banding (exact: equal content => equal Jaccard to any
-probe, and the kept min id is the (jaccard, id) tiebreak winner), so a
-boilerplate caption indexed a million times contributes one posting per
-band. Distinct-but-near-identical mega-keys are the same skew class the
-batch tier caps (operators/candidates.py) — at 100 TB reuse those caps and
+(sh_hashes + band_keys from one Arrow pass — no re-shingling at probe time).
+The exact leg, top-1, novel anti-join and APPEND are the shared lifecycle
+(plans/index_lifecycle.py). The near leg is the caption stream's banded
+equi-join (streaming/caption_probe.py), which shuffles only the increment
+when the index is stored bucketed by (band, key) (plans/bucketed.py).
+Identical-caption index entries collapse to one representative before
+banding (exact: equal content => equal Jaccard to any probe, and the kept
+min id is the (jaccard, id) tiebreak winner), so a boilerplate caption
+indexed a million times contributes one posting per band.
+Distinct-but-near-identical mega-keys are the same skew class the batch
+tier caps (operators/candidates.py) — at 100 TB reuse those caps and
 salting on this join.
 """
 
@@ -28,10 +30,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..config import DEFAULT, DedupConfig
 from ..operators.minhash import prepared_features
+from ..streaming.caption_probe import caption_bands_for_stream, caption_near_pairs
+from .index_lifecycle import append_novel_to_index as _append_novel, probe_index
 
 
 def build_caption_index(items: DataFrame, cfg: DedupConfig = DEFAULT,
@@ -49,78 +52,20 @@ def build_caption_index(items: DataFrame, cfg: DedupConfig = DEFAULT,
 
 def probe_captions(probes: DataFrame, index: DataFrame,
                    cfg: DedupConfig = DEFAULT) -> DataFrame:
-    """Probe caption rows against a build_caption_index frame. ``probes`` is
-    either raw (image_id, caption) or an already-featurized frame of the
-    index shape. Returns (image_id, verdict, refers_to_id, jaccard); jaccard
-    is null for exact/novel verdicts."""
-    p = probes if "sh_hashes" in probes.columns \
-        else build_caption_index(probes, cfg)
-
-    exact_ref = index.groupBy("digest").agg(
-        F.min("image_id").alias("exact_ref"))
-    e = p.join(exact_ref, "digest", "left")
-    hits_exact = e.filter(F.col("exact_ref").isNotNull()).select(
-        "image_id",
-        F.lit("duplicate").alias("verdict"),
-        F.col("exact_ref").alias("refers_to_id"),
-        F.lit(None).cast("double").alias("jaccard"),
-    )
-    miss = e.filter(F.col("exact_ref").isNull()) \
-        .select("image_id", "sh_hashes", "band_keys")
-
-    # one representative per identical caption (digest = content hash):
-    # equal content gives equal Jaccard to any probe, so keeping the min id
-    # preserves the (jaccard desc, id asc) top-1 exactly
-    w_idx = Window.partitionBy("digest").orderBy("image_id")
-    idx1 = index.withColumn("_rn", F.row_number().over(w_idx)) \
-        .filter(F.col("_rn") == 1)
-
-    pb = miss.select(
-        "image_id", F.col("sh_hashes").alias("sh_p"),
-        F.posexplode("band_keys").alias("band", "key"))
-    ib = idx1.select(
-        F.col("image_id").alias("idx_image_id"),
-        F.col("sh_hashes").alias("sh_i"),
-        F.posexplode("band_keys").alias("band", "key"))
-    j = pb.join(ib, ["band", "key"]) \
-        .filter(F.col("image_id") != F.col("idx_image_id"))
-    inter = F.size(F.array_intersect(F.col("sh_p"), F.col("sh_i")))
-    union = F.size("sh_p") + F.size("sh_i") - inter
-    scored = j.withColumn("jaccard", inter / F.greatest(union, F.lit(1))) \
-        .filter(F.col("jaccard") >= cfg.jaccard_threshold)
-    # several agreeing bands emit the same (probe, index) pair several times
-    # with identical payload; the top-1 window collapses them for free
-    w = Window.partitionBy("image_id").orderBy(
-        F.col("jaccard").desc(), F.col("idx_image_id").asc())
-    hits_near = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "image_id",
-            F.lit("near_duplicate").alias("verdict"),
-            F.col("idx_image_id").alias("refers_to_id"),
-            "jaccard",
-        )
-    )
-    novel = (
-        miss.join(hits_near.select("image_id"), "image_id", "left_anti")
-        .select(
-            "image_id",
-            F.lit("novel").alias("verdict"),
-            F.lit(None).cast("string").alias("refers_to_id"),
-            F.lit(None).cast("double").alias("jaccard"),
-        )
-    )
-    return hits_exact.unionByName(hits_near).unionByName(novel)
+    """Probe featurized caption rows (build_caption_index output) against a
+    build_caption_index frame. Returns (image_id, verdict, refers_to_id,
+    jaccard); jaccard is null for exact/novel verdicts. The near leg is the
+    caption stream's (streaming/caption_probe.caption_near_pairs: one row
+    per verified pair) over one representative per identical caption."""
+    bands = caption_bands_for_stream(index)
+    return probe_index(probes, index,
+                       lambda miss: caption_near_pairs(miss, bands, cfg),
+                       "jaccard", higher_is_better=True)
 
 
 def append_novel_to_index(index: DataFrame, probes_featurized: DataFrame,
                           verdicts: DataFrame) -> DataFrame:
-    """APPEND mode (K1): an increment's novel rows join the index for the
-    next increment; duplicates/near-duplicates are already represented by
-    the row they refer to. Pass the FEATURIZED probes (build_caption_index
-    output) so features are never recomputed."""
-    novel_ids = verdicts.filter(F.col("verdict") == "novel").select("image_id")
-    return index.unionByName(
-        probes_featurized.join(F.broadcast(novel_ids), "image_id")
-        .select(*index.columns))
+    """APPEND mode (K1, plans/index_lifecycle.append_novel_to_index). Pass
+    the FEATURIZED probes (build_caption_index output) so features are never
+    recomputed."""
+    return _append_novel(index, probes_featurized, verdicts)

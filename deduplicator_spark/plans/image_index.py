@@ -16,8 +16,9 @@ exact-beats-weaker preference, LuceneIndexSearcher.java:131-170):
      (top-1 by (hamming, index id) — deterministic total order, O10)
   3. else                                         -> verdict 'novel'
 
-Scale shape: the exact leg is a digest equi-join against the (deduplicated)
-index; the near leg reuses the stateless banded probe join of
+Scale shape: the exact leg, top-1, novel anti-join and APPEND are the
+shared lifecycle (plans/index_lifecycle.py); this module adds the index
+rows and the near leg, which reuses the stateless banded probe join of
 streaming/probe.py (pigeonhole recall-1, one row per verified pair via the
 first-agreeing-band trick) and only probes rows the exact leg missed. Store
 the index bucketed (plans/bucketed.py) and neither leg shuffles the index.
@@ -27,9 +28,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..config import DEFAULT, DedupConfig
+from ..streaming.probe import phash_index_for_stream, probe_phash_stream
+from .index_lifecycle import append_novel_to_index, probe_index
 
 
 def build_image_index(images: DataFrame,
@@ -51,84 +53,25 @@ def probe_images(probes: DataFrame, index: DataFrame,
     build_image_index. Returns (image_id, verdict, refers_to_id, hamming);
     hamming is null for exact/novel verdicts. A re-probed indexed image is
     an exact duplicate of its indexed self (reference semantics: the index
-    is the history, any hit is a revisit). Pass a pyspark Observation to
-    collect per-verdict counters with the result action — the AtomicLong
-    statistics of DeDuplicator.java:54-94 without a second pass."""
-    from ..streaming.probe import phash_index_for_stream, probe_phash_stream
+    is the history, any hit is a revisit). ``observation`` collects
+    per-verdict counters (plans/index_lifecycle.probe_index)."""
 
-    exact_ref = index.groupBy("digest").agg(
-        F.min("image_id").alias("exact_ref"))
-    e = probes.select("image_id", "digest", "phash") \
-        .join(exact_ref, "digest", "left")
-    hits_exact = e.filter(F.col("exact_ref").isNotNull()).select(
-        "image_id",
-        F.lit("duplicate").alias("verdict"),
-        F.col("exact_ref").alias("refers_to_id"),
-        F.lit(None).cast("long").alias("hamming"),
-    )
-    miss = e.filter(F.col("exact_ref").isNull()).drop("exact_ref", "digest")
+    def near(miss: DataFrame) -> DataFrame:
+        # Near-side skew guard, EXACT by construction: collapse the index to
+        # one representative (min image_id) per distinct phash before
+        # banding. Hamming depends only on phash, and the min id of an
+        # equal-phash group is precisely the row the (hamming, id) top-1
+        # would pick, so output is unchanged while a 100 TB hot class (black
+        # frames, logo cards: one phash, millions of rows) contributes ONE
+        # posting per band instead of a mega-bucket.
+        reps = index.groupBy("phash").agg(F.min("image_id").alias("image_id"))
+        return probe_phash_stream(miss, phash_index_for_stream(reps, cfg), cfg) \
+            .select("image_id", "idx_image_id",
+                    F.col("hamming").cast("long").alias("hamming"))
 
-    # Near-side skew guard, EXACT by construction: collapse the index to one
-    # representative (min image_id) per distinct phash before banding.
-    # Hamming depends only on phash, and the top-1 tiebreak is
-    # (hamming, idx_image_id) ascending — the min id of an equal-phash group
-    # is precisely the row top-1 would pick — so output is unchanged while a
-    # 100 TB hot class (black frames, logo cards: one phash, millions of
-    # rows) contributes ONE posting per band instead of a mega-bucket.
-    idx_by_phash = index.groupBy("phash").agg(
-        F.min("image_id").alias("image_id"))
-    banded = phash_index_for_stream(idx_by_phash, cfg)
-    near = probe_phash_stream(miss, banded, cfg)  # batch frames: plain joins
-    w = Window.partitionBy("image_id").orderBy(
-        F.col("hamming").asc(), F.col("idx_image_id").asc())
-    hits_near = (
-        near.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "image_id",
-            F.lit("near_duplicate").alias("verdict"),
-            F.col("idx_image_id").alias("refers_to_id"),
-            F.col("hamming").cast("long").alias("hamming"),
-        )
-    )
-    novel = (
-        miss.join(hits_near.select("image_id"), "image_id", "left_anti")
-        .select(
-            "image_id",
-            F.lit("novel").alias("verdict"),
-            F.lit(None).cast("string").alias("refers_to_id"),
-            F.lit(None).cast("long").alias("hamming"),
-        )
-    )
-    out = hits_exact.unionByName(hits_near).unionByName(novel)
-    if observation is not None:
-        out = out.observe(
-            observation,
-            F.count(F.lit(1)).alias("handled"),
-            *[F.sum((F.col("verdict") == v).cast("long")).alias(v)
-              for v in ("duplicate", "near_duplicate", "novel")],
-        )
-    return out
-
-
-def append_novel_to_index(index: DataFrame, probes: DataFrame,
-                          verdicts: DataFrame) -> DataFrame:
-    """The reference's APPEND indexing mode (K1: IndexingLauncher CREATE vs
-    APPEND, IndexBuilder.java) as incremental image-index maintenance: after
-    probing an increment, only its NOVEL rows enter the index — duplicates
-    and near-duplicates are already represented by the row they refer to, so
-    the index stays one-entry-per-content-class instead of growing with the
-    crawl. The next increment then probes against corpus UNION novels.
-
-    Scale shape: the novel filter is a broadcast-able semi-join on the
-    increment (bounded by increment size, never the corpus), and the union
-    is metadata-only — at cluster scale write novels as an appended
-    partition of the bucketed store (plans/bucketed.py) and the index stays
-    pre-organized by key with no rewrite of history."""
-    novel_ids = verdicts.filter(F.col("verdict") == "novel").select("image_id")
-    novel_rows = probes.join(F.broadcast(novel_ids), "image_id") \
-        .select("image_id", "digest", "phash")
-    return index.unionByName(novel_rows)
+    return probe_index(probes.select("image_id", "digest", "phash"), index,
+                       near, "hamming", higher_is_better=False,
+                       observation=observation)
 
 
 def probe_and_extend(probes: DataFrame, index: DataFrame,

@@ -178,12 +178,6 @@ def bad_ids_from_features(feats: DataFrame, cfg: DedupConfig = DEFAULT) -> DataF
     ).select("image_id")
 
 
-def quarantine_ids(images: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame:
-    """Standalone quarantine gate (one decode pass; see validation_features
-    for the fused digest+validation form pipelines should prefer)."""
-    return bad_ids_from_features(validation_features(images), cfg)
-
-
 def _metric_rows(df: DataFrame, stage: str, metric, value) -> DataFrame:
     return df.select(
         F.lit(stage).alias("stage"),

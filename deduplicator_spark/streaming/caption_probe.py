@@ -19,7 +19,8 @@ stream carries no state store at all:
 Like the image stream, this emits HITS only (duplicate + near_duplicate
 rows, one per verified pair). Top-1-per-probe and novelty are negatives
 over the whole index that no stateless per-row operator can decide — the
-batch probe (plans/caption_index.probe_captions) reconciles them; see the
+batch probe (plans/caption_index.probe_captions) reconciles them from the
+same two static frames and the same near leg (caption_near_pairs); see the
 probe_phash_stream docstring for the same argument on images.
 """
 
@@ -30,12 +31,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..config import DEFAULT, DedupConfig
+from ..plans.index_lifecycle import exact_refs, near_hits, split_exact, union_verdicts
 
-
-def caption_exact_for_stream(index: DataFrame) -> DataFrame:
-    """Static exact tier: one (digest, exact_ref) row per distinct content
-    digest (min image_id — the probe_captions tiebreak)."""
-    return index.groupBy("digest").agg(F.min("image_id").alias("exact_ref"))
+# Static exact tier: one (digest, exact_ref) row per distinct content digest
+# (min image_id, the batch tiebreak).
+caption_exact_for_stream = exact_refs
 
 
 def caption_bands_for_stream(index: DataFrame) -> DataFrame:
@@ -56,6 +56,29 @@ def caption_bands_for_stream(index: DataFrame) -> DataFrame:
     )
 
 
+def caption_near_pairs(probes: DataFrame, banded_index: DataFrame,
+                       cfg: DedupConfig = DEFAULT) -> DataFrame:
+    """(image_id, idx_image_id, jaccard) for every featurized probe row and
+    caption_bands_for_stream entry with Jaccard >= cfg.jaccard_threshold,
+    one row per pair (its first agreeing band)."""
+    pb = probes.select(
+        "image_id", F.col("sh_hashes").alias("sh_p"),
+        F.col("band_keys").alias("bk_p"),
+        F.posexplode("band_keys").alias("band", "key"))
+    j = pb.join(banded_index, ["band", "key"]) \
+        .filter(F.col("image_id") != F.col("idx_image_id"))
+    first_agree = F.array_position(
+        F.zip_with("bk_p", "bk_i", lambda a, b: a == b), True) - 1
+    inter = F.size(F.array_intersect(F.col("sh_p"), F.col("sh_i")))
+    union = F.size("sh_p") + F.size("sh_i") - inter
+    return (
+        j.filter(F.col("band") == first_agree)
+        .withColumn("jaccard", inter / F.greatest(union, F.lit(1)))
+        .filter(F.col("jaccard") >= cfg.jaccard_threshold)
+        .select("image_id", "idx_image_id", "jaccard")
+    )
+
+
 def probe_caption_stream(captures: DataFrame, exact_ref: DataFrame,
                          banded_index: DataFrame,
                          cfg: DedupConfig = DEFAULT) -> DataFrame:
@@ -71,35 +94,6 @@ def probe_caption_stream(captures: DataFrame, exact_ref: DataFrame,
         from ..plans.caption_index import build_caption_index
         p = build_caption_index(captures, cfg)
 
-    e = p.join(F.broadcast(exact_ref), "digest", "left")
-    dup = e.filter(F.col("exact_ref").isNotNull()).select(
-        "image_id",
-        F.lit("duplicate").alias("verdict"),
-        F.col("exact_ref").alias("refers_to_id"),
-        F.lit(None).cast("double").alias("jaccard"),
-    )
-    miss = e.filter(F.col("exact_ref").isNull()).select(
-        "image_id", F.col("sh_hashes").alias("sh_p"),
-        F.col("band_keys").alias("bk_p"), "band_keys")
-
-    pb = miss.select(
-        "image_id", "sh_p", "bk_p",
-        F.posexplode("band_keys").alias("band", "key"))
-    j = pb.join(banded_index, ["band", "key"]) \
-        .filter(F.col("image_id") != F.col("idx_image_id"))
-    first_agree = F.array_position(
-        F.zip_with("bk_p", "bk_i", lambda a, b: a == b), True) - 1
-    inter = F.size(F.array_intersect(F.col("sh_p"), F.col("sh_i")))
-    union = F.size("sh_p") + F.size("sh_i") - inter
-    near = (
-        j.filter(F.col("band") == first_agree)
-        .withColumn("jaccard", inter / F.greatest(union, F.lit(1)))
-        .filter(F.col("jaccard") >= cfg.jaccard_threshold)
-        .select(
-            "image_id",
-            F.lit("near_duplicate").alias("verdict"),
-            F.col("idx_image_id").alias("refers_to_id"),
-            "jaccard",
-        )
-    )
-    return dup.unionByName(near)
+    dup, miss = split_exact(p, F.broadcast(exact_ref))
+    return union_verdicts(
+        dup, near_hits(caption_near_pairs(miss, banded_index, cfg), "jaccard"))

@@ -138,3 +138,35 @@ def test_reprobed_index_row_is_duplicate_of_itself(spark):
     rows = {r["image_id"]: r for r in out.collect()}
     assert rows["a"]["verdict"] == "duplicate" and rows["a"]["refers_to_id"] == "a"
     assert rows["b"]["verdict"] == "duplicate" and rows["b"]["refers_to_id"] == "b"
+
+
+@pytest.fixture(scope="module")
+def collapsed(spark):
+    # idx3, idx1, idx2 share phash P with distinct bytes; idx0 carries Q,
+    # which differs from P in two bits (5 and 45)
+    p = 0x00FF00FF00FF00FF
+    rows = [(f"idx{i}", bytearray(f"bytes-{i}".encode()), p) for i in (3, 1, 2)]
+    rows.append(("idx0", bytearray(b"bytes-0"), _flip(p, 5, 45)))
+    index = build_image_index(spark.createDataFrame(
+        rows, "image_id string, bytes binary, phash long"))
+    probes = spark.createDataFrame(
+        [
+            ("p_rep", "d-rep", _flip(p, 20, 60)),  # Hamming 2 from P only
+            ("p_tie", "d-tie", _flip(p, 5)),       # Hamming 1 from P and Q
+        ],
+        "image_id string, digest string, phash long")
+    return {r["image_id"]: r for r in probe_images(probes, index, DEFAULT).collect()}
+
+
+def test_equal_phash_index_rows_resolve_to_min_id(collapsed):
+    # the near leg keeps one representative per distinct phash; it must be
+    # the row the (hamming, id) top-1 picks among idx3, idx1, idx2
+    assert collapsed["p_rep"]["verdict"] == "near_duplicate"
+    assert collapsed["p_rep"]["refers_to_id"] == "idx1"
+    assert collapsed["p_rep"]["hamming"] == 2
+
+
+def test_equal_hamming_tie_resolves_to_lower_id(collapsed):
+    assert collapsed["p_tie"]["verdict"] == "near_duplicate"
+    assert collapsed["p_tie"]["refers_to_id"] == "idx0"
+    assert collapsed["p_tie"]["hamming"] == 1
