@@ -14,11 +14,7 @@ from dataclasses import dataclass, field
 
 @dataclass(frozen=True)
 class DedupConfig:
-    # --- tier 0: exact (ref DigestIndexer / DIGEST_ANY) ---
-    digest_algo: str = "sha256"           # ref uses sha1:BASE32 (CrawlDataItem.java:66-79)
-
     # --- tier 1: SimHash over pHash bitplanes ---
-    simhash_bits: int = 64
     phash_bands: int = 4                  # 4 x 16-bit bands -> guarantees recall for
     phash_band_bits: int = 16             # Hamming distance <= 3 by pigeonhole
     phash_max_hamming: int = 3            # verified distance for a near-image pair
@@ -83,7 +79,7 @@ class DedupConfig:
 
     def __post_init__(self) -> None:
         assert self.minhash_perms == self.lsh_bands * self.lsh_rows
-        assert self.simhash_bits == self.phash_bands * self.phash_band_bits
+        assert self.phash_bands * self.phash_band_bits == 64
 
 
 DEFAULT = DedupConfig()

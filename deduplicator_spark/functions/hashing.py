@@ -1,11 +1,12 @@
-"""Hashing / signature column expressions — all JVM-side (whole-stage codegen).
+"""Hashing / signature column expressions — all JVM-side.
 
 The reference hashes once per record in Java (SHA-1 content digests,
-CrawlDataItem.java:66-79). At 10^12 rows the hot path must stay inside
-Tungsten: every signature here (SHA-256, MinHash, SimHash, LSH band keys) is a
-pure Column expression built from pyspark.sql.functions — zero Python in the
-hot path. A numpy `mapInPandas` MinHash twin lives in operators/minhash.py
-for parity testing and as the pattern for signatures Spark can't express.
+CrawlDataItem.java:66-79). Here the content digest, the caption tokenizer
+and shingler, SimHash and the pHash band keys are pure Column expressions
+built from pyspark.sql.functions — no Python in the hot path. Caption
+MinHash signatures and LSH band keys are the exception: they are computed
+in one batched Arrow pass (operators/minhash.prepared_features), because
+Spark runs the 128-permutation higher-order-function form interpreted.
 """
 
 from __future__ import annotations
@@ -14,8 +15,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, DedupConfig
-
-MASK63 = (1 << 63) - 1
 
 
 def digest_sha256(col: Column) -> Column:
@@ -41,40 +40,6 @@ def shingles(toks: Column, k: int = DEFAULT.shingle_k) -> Column:
     return F.array_distinct(
         F.when(F.size(toks) >= k, windows).otherwise(F.array(joined))
     )
-
-
-def minhash_signature(shingle_col: Column, cfg: DedupConfig = DEFAULT) -> Column:
-    """array<long> of cfg.minhash_perms min-hashes.
-
-    Permutation j = xxhash64(shingle, j) (seeded 64-bit mix); min over the
-    shingle set per permutation. Pure codegen: one array scan per permutation,
-    no explode, no shuffle, no Python."""
-    # NB: the lambda must stay single-parameter — PySpark binds a 2-parameter
-    # lambda as (element, index), which would shadow the permutation constant.
-    def perm(j: int):
-        return lambda s: F.xxhash64(s, F.lit(j))
-
-    sigs = [
-        F.array_min(F.transform(shingle_col, perm(j)))
-        for j in range(cfg.minhash_perms)
-    ]
-    return F.array(*sigs)
-
-
-def lsh_band_keys(sig: Column, cfg: DedupConfig = DEFAULT) -> Column:
-    """array<struct<band:int, key:long>> — one hashed key per LSH band.
-
-    Two rows share a band key iff their signatures agree on all cfg.lsh_rows
-    rows of that band; the candidate join is then a plain equi-join on
-    (band, key) — the set-oriented analog of the reference's index probe
-    (LuceneIndexSearcher.java:285-296), with Catalyst/AQE picking the physical
-    join and splitting skewed keys."""
-    bands = []
-    for b in range(cfg.lsh_bands):
-        chunk = F.slice(sig, b * cfg.lsh_rows + 1, cfg.lsh_rows)
-        key = F.xxhash64(F.concat_ws(",", F.transform(chunk, lambda x: x.cast("string"))), F.lit(b))
-        bands.append(F.struct(F.lit(b).alias("band"), key.alias("key")))
-    return F.array(*bands)
 
 
 def simhash64(toks: Column, feature_hash=None) -> Column:

@@ -49,9 +49,8 @@ def collect_buckets(
     """(band, key, ids, n) per bucket with > 1 member — the salted two-phase
     member collection. ``ids`` is the capped, sorted member sample
     (<= salt_buckets * (pair_cap+1), smallest ids first, true global minimum
-    at position 1); ``n`` is the exact bucket cardinality. Exposed separately
-    from candidate_pairs_from_bands so the salting lever can be measured in
-    isolation (tools/skew_bench.py)."""
+    at position 1); ``n`` is the exact bucket cardinality. Its skew
+    measurements are in BENCH/SKEW.md."""
     frag_cap = pair_cap + 1  # one extra: a complete fragment proves n <= cap
     # Rank-then-collect, NOT collect-then-slice: slicing a collect_list
     # still buffers the whole salt group (n/S ids) in one non-spillable

@@ -1,18 +1,18 @@
 """Tier 2 — near-caption candidates via MinHash/LSH + exact-Jaccard verify.
 
-Pipeline (all JVM-side until the final join):
-    caption -> tokens -> k-shingles -> 128 min-hashes -> 32 x 4 band keys
-    -> explode (band, key) -> bucketed candidate pairs -> exact Jaccard
-    verification on the shingle sets (array_intersect; no Python).
+Pipeline:
+    caption -> tokens -> k-shingle hashes -> 128 min-hashes -> 32 band keys
+    (one Arrow pass, prepared_features) -> explode (band, key) -> bucketed
+    candidate pairs -> exact Jaccard verification on the shingle-hash sets
+    (array_intersect, JVM-side).
 
 With b=32, r=4: P(candidate | J) = 1-(1-J^4)^32, i.e. ~1 for J >= 0.8
 (miss ~5e-8) and ~0.02 at J = 0.3 — the verified output at threshold 0.8 is
 the exact-Jaccard join with negligible recall loss, at O(n·bands) instead of
 O(n^2) cost.
 
-A numpy mapInPandas signature path (minhash_signatures_pandas) exists for
-parity testing and as the template for signatures that can't be expressed as
-Column algebra.
+A caption with no tokens (null, empty or whitespace-only) has no shingles
+and no band keys, so it never forms a near_caption or containment pair.
 """
 
 from __future__ import annotations
@@ -26,34 +26,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, DedupConfig
-from ..functions.hashing import lsh_band_keys, minhash_signature, shingles, tokens
 from .candidates import candidate_pairs_from_bands
 
 
-def with_shingles(images: DataFrame, cfg: DedupConfig = DEFAULT,
-                  text_col: str = "caption") -> DataFrame:
-    return images.withColumn("shingles", shingles(tokens(F.col(text_col)), cfg.shingle_k))
-
-
-def minhash_banded(images: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame:
-    """(image_id, band, key) — exploded LSH band keys."""
-    sig = with_shingles(images, cfg).select(
-        "image_id", minhash_signature(F.col("shingles"), cfg).alias("sig")
-    )
-    return sig.select(
-        "image_id", F.explode(lsh_band_keys(F.col("sig"), cfg)).alias("bk")
-    ).select("image_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-
-
-def jaccard_verify(cands: DataFrame, shingled: DataFrame,
-                   threshold: float, col: str = "shingles") -> DataFrame:
-    """Join candidate pairs back to shingle sets; exact Jaccard, JVM-side.
-
-    ``col`` is the set column: "shingles" (array<string>) or "sh_hashes"
-    (array<long> from prepared_features — preferred: long comparisons)."""
-    sh = shingled.select("image_id", col)
-    a = sh.withColumnRenamed("image_id", "id_a").withColumnRenamed(col, "sh_a")
-    b = sh.withColumnRenamed("image_id", "id_b").withColumnRenamed(col, "sh_b")
+def jaccard_verify(cands: DataFrame, prepared: DataFrame,
+                   threshold: float) -> DataFrame:
+    """Join candidate pairs back to the ``sh_hashes`` shingle-hash sets of
+    prepared_features; exact Jaccard, JVM-side."""
+    sh = prepared.select("image_id", "sh_hashes")
+    a = sh.withColumnRenamed("image_id", "id_a").withColumnRenamed("sh_hashes", "sh_a")
+    b = sh.withColumnRenamed("image_id", "id_b").withColumnRenamed("sh_hashes", "sh_b")
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union = F.size("sh_a") + F.size("sh_b") - inter
     # cands is an aggregated (distinct) all-string pair table that grows
@@ -70,47 +52,32 @@ def jaccard_verify(cands: DataFrame, shingled: DataFrame,
 
 
 def near_caption_pairs(images: DataFrame, cfg: DedupConfig = DEFAULT,
-                       use_arrow: bool = True,
                        prepared: DataFrame | None = None) -> DataFrame:
     """(id_a, id_b, tier='near_caption', score=jaccard).
 
-    use_arrow selects the batched numpy signature path (default; see below)
-    vs the pure-Column path; both feed the same exact-Jaccard verification,
-    so the output pairs are identical either way. Pass a persisted
-    ``prepared_features`` frame to share the caption scan with tier 3."""
-    if use_arrow:
-        prep = prepared if prepared is not None else prepared_features(images, cfg)
-        cands = candidate_pairs_from_bands(
-            banded_from_prepared(prep),
-            pair_cap=cfg.hot_band_threshold, salt_buckets=cfg.salt_buckets)
-        verified = jaccard_verify(cands, prep, cfg.jaccard_threshold, col="sh_hashes")
-    else:
-        shingled = with_shingles(images, cfg)
-        cands = candidate_pairs_from_bands(
-            minhash_banded(images, cfg),
-            pair_cap=cfg.hot_band_threshold, salt_buckets=cfg.salt_buckets)
-        verified = jaccard_verify(cands, shingled, cfg.jaccard_threshold)
-    return verified.select(
+    Pass a persisted ``prepared_features`` frame to share the caption scan
+    with tier 3."""
+    prep = prepared if prepared is not None else prepared_features(images, cfg)
+    cands = candidate_pairs_from_bands(
+        banded_from_prepared(prep),
+        pair_cap=cfg.hot_band_threshold, salt_buckets=cfg.salt_buckets)
+    return jaccard_verify(cands, prep, cfg.jaccard_threshold).select(
         "id_a", "id_b",
         F.lit("near_caption").alias("tier"),
         F.col("jaccard").alias("score"),
     )
 
 
-# --- Arrow/numpy batched path (the production signature path) ----------------
+# --- Arrow/numpy batched signatures ------------------------------------------
 #
 # Spark evaluates higher-order functions (transform/aggregate/array_min)
-# INTERPRETED, outside whole-stage codegen — the 128-permutation Column
+# INTERPRETED, outside whole-stage codegen, so a 128-permutation Column
 # expression costs ~45 s of codegen compile plus per-element closure calls.
-# The north star prescribes "batched MinHash signatures ... vectorized
-# pandas/Arrow UDFs (no per-row Python)", and measurement agrees: hashing each
-# batch's shingles once (C-level siphash via pd.util.hash_array) and taking
-# the 128 affine-permutation minima with np.minimum.reduceat is ~10x faster
-# wall-clock than the HOF plan at n=10k. The Column path above remains as the
-# pure-JVM alternative; verified outputs are identical (both families have
-# P(miss | J>=0.8) ~ 5e-8 at b=32, r=4).
+# Hashing each batch's shingles once (C-level siphash via
+# pd.util.hash_array) and taking the 128 affine-permutation minima with
+# np.minimum.reduceat is ~10x faster wall-clock at n=10k.
 
-_MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
+_NO_KEYS = np.empty(0, dtype=np.int64)
 _SM1 = np.uint64(0xBF58476D1CE4E5B9)
 _SM2 = np.uint64(0x94D049BB133111EB)
 
@@ -134,23 +101,25 @@ def _perm_coeffs(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
 def _batch_shingle_hashes(captions, k: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Hash every caption's distinct k-shingles once (C-level siphash).
 
-    Returns (base_hashes uint64 flat, offsets intp len n+1, n_tok int32)."""
+    Returns (base_hashes uint64 flat, offsets intp len n+1, n_tok int32). A
+    caption with no tokens (null, empty or whitespace-only) gets n_tok 0 and
+    an empty segment: no shingle, so nothing to share with another caption."""
     flat: list[str] = []
     offsets = [0]
-    ntok = np.empty(len(captions), dtype=np.int32)
+    ntok = np.zeros(len(captions), dtype=np.int32)
     for r, cap in enumerate(captions):
-        # mirror the Column path's tokens() = split(trim(cap), '\s+')
-        # exactly (trim strips spaces only; other edge whitespace yields
-        # empty tokens; re.ASCII pins \s to the JVM's ASCII-only dialect —
-        # Python's Unicode \s would also split on NBSP and diverge) so
-        # use_arrow=True/False produce identical shingles
-        toks = re.split(r"\s+", cap.strip(" "), flags=re.ASCII)
-        ntok[r] = len(toks)
-        if len(toks) >= k:
-            sh = {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
-        else:
-            sh = {" ".join(toks)}
-        flat.extend(sh)
+        # mirror tokens() = split(trim(cap), '\s+') exactly (trim strips
+        # spaces only; other edge whitespace yields empty tokens; re.ASCII
+        # pins \s to the JVM's ASCII-only dialect — Python's Unicode \s
+        # would also split on NBSP and diverge) so n_tok equals the JVM's
+        # token count
+        toks = re.split(r"\s+", cap.strip(" "), flags=re.ASCII) if cap is not None else []
+        if any(toks):
+            ntok[r] = len(toks)
+            if len(toks) >= k:
+                flat.extend({" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)})
+            else:
+                flat.append(" ".join(toks))
         offsets.append(len(flat))
     base = pd.util.hash_array(np.asarray(flat, dtype=object)).astype(np.uint64)
     return base, np.asarray(offsets, dtype=np.intp), ntok
@@ -158,16 +127,18 @@ def _batch_shingle_hashes(captions, k: int) -> tuple[np.ndarray, np.ndarray, np.
 
 def _signatures_from_hashes(base: np.ndarray, offsets: np.ndarray,
                             cfg: DedupConfig, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """(n_rows, nperm) uint64 MinHash signatures: permutation minima via
-    minimum.reduceat (perms chunked to bound memory at ~len(base) x 32 x 8 B)."""
-    n = len(offsets) - 1
-    offs = offsets[:-1]
-    sig = np.empty((n, cfg.minhash_perms), dtype=np.uint64)
+    """(n_nonempty, nperm) uint64 MinHash signatures of the rows that have
+    shingles, in row order: permutation minima via minimum.reduceat (perms
+    chunked to bound memory at ~len(base) x 32 x 8 B). Empty segments are
+    left out of the reduceat starts — for one it would return the next row's
+    first element, or index past the end on the last row."""
+    starts = offsets[:-1][np.diff(offsets) > 0]
+    sig = np.empty((len(starts), cfg.minhash_perms), dtype=np.uint64)
     with np.errstate(over="ignore"):
         for j0 in range(0, cfg.minhash_perms, 32):
             j1 = min(j0 + 32, cfg.minhash_perms)
             p = base[:, None] * a[None, j0:j1] + b[None, j0:j1]
-            sig[:, j0:j1] = np.minimum.reduceat(p, offs, axis=0)
+            sig[:, j0:j1] = np.minimum.reduceat(p, starts, axis=0)
     return sig
 
 
@@ -175,6 +146,14 @@ def _batch_signatures(captions, cfg: DedupConfig,
                       a: np.ndarray, b: np.ndarray) -> np.ndarray:
     base, offsets, _ = _batch_shingle_hashes(captions, cfg.shingle_k)
     return _signatures_from_hashes(base, offsets, cfg, a, b)
+
+
+def _row_band_keys(base: np.ndarray, offsets: np.ndarray, cfg: DedupConfig,
+                   a: np.ndarray, b: np.ndarray) -> list[np.ndarray]:
+    """Per-row int64 band keys; a row with no shingles gets an empty array,
+    so it lands in no LSH bucket."""
+    keys = iter(_band_keys(_signatures_from_hashes(base, offsets, cfg, a, b), cfg))
+    return [next(keys) if h else _NO_KEYS for h in np.diff(offsets) > 0]
 
 
 def _band_keys(sig: np.ndarray, cfg: DedupConfig) -> np.ndarray:
@@ -188,29 +167,11 @@ def _band_keys(sig: np.ndarray, cfg: DedupConfig) -> np.ndarray:
     return key.view(np.int64)
 
 
-def minhash_signatures_pandas(images: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame:
-    """(image_id, sig array<long>) via the batched numpy path."""
-    a, b = _perm_coeffs(cfg)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            sig = _batch_signatures(pdf["caption"], cfg, a, b).view(np.int64)
-            yield pd.DataFrame(
-                {"image_id": pdf["image_id"], "sig": [s.tolist() for s in sig]}
-            )
-
-    return images.select("image_id", "caption").mapInPandas(
-        gen, schema="image_id string, sig array<long>"
-    )
-
-
 def prepared_features(images: DataFrame, cfg: DedupConfig = DEFAULT,
                       with_signatures: bool = True) -> DataFrame:
     """One Arrow pass computing every caption-derived feature the caption
     tiers need: (image_id, n_tok, sh_hashes sorted array<long>, band_keys
-    array<long>[lsh_bands]).
+    array<long>[lsh_bands], empty for a caption with no tokens).
 
     The shingle HASHES replace shingle strings everywhere downstream:
     array_intersect on longs is far cheaper than on strings, the base hash is
@@ -232,8 +193,7 @@ def prepared_features(images: DataFrame, cfg: DedupConfig = DEFAULT,
                 continue
             base, offsets, ntok = _batch_shingle_hashes(pdf["caption"], k)
             if with_signatures:
-                sig = _signatures_from_hashes(base, offsets, cfg, a, b)
-                band_keys = list(_band_keys(sig, cfg))
+                band_keys = _row_band_keys(base, offsets, cfg, a, b)
             else:
                 band_keys = [[]] * len(pdf)
             signed = base.view(np.int64)

@@ -87,5 +87,5 @@ def prefix_filtered_pairs(items: DataFrame, t: float = 0.8,
                 F.col("b.image_id").alias("id_b"))
         .distinct()
     )
-    return jaccard_verify(cands, sh, t, col="sh_hashes") \
+    return jaccard_verify(cands, sh, t) \
         .select("id_a", "id_b", "jaccard")

@@ -7,8 +7,8 @@ synthetic corpus — whose every byte is a pure function of (row id, seed)
 the per-image FEATURE layer (digest, phash, caption shingle hashes, LSH band
 keys) and the pairwise PSNR verdicts to parquet, single-process, by calling
 the SAME library functions the executors run (codecs.decode_image/psnr/
-phash64, operators.minhash._batch_shingle_hashes/_signatures_from_hashes/
-_band_keys). A DuckDB twin (entry_queries.ORACLES['image_dedup_verdicts'])
+phash64, operators.minhash._batch_shingle_hashes/_row_band_keys). A DuckDB
+twin (entry_queries.ORACLES['image_dedup_verdicts'])
 then re-derives the entire post-feature graph — capped/star banded candidate
 generation, Hamming + PSNR + Jaccard + containment verification, tier-priority
 edge dedup, recursive-CTE connected components, verdict/lineage assembly — in
@@ -51,20 +51,14 @@ def build_feature_rows(n: int = SYNTH_N, seed: int = SYNTH_SEED):
     n_tok/sh_hashes/band_keys, over synth.make_row output."""
     from .codecs import decode_image, phash64
     from .config import DEFAULT
-    from .operators.minhash import (
-        _band_keys,
-        _batch_shingle_hashes,
-        _perm_coeffs,
-        _signatures_from_hashes,
-    )
+    from .operators.minhash import _batch_shingle_hashes, _perm_coeffs, _row_band_keys
     from .synth import make_row
 
     rows = [make_row(i, seed) for i in range(n)]
     captions = [r["caption"] for r in rows]
     base, offsets, ntok = _batch_shingle_hashes(captions, DEFAULT.shingle_k)
     a, b = _perm_coeffs(DEFAULT)
-    sig = _signatures_from_hashes(base, offsets, DEFAULT, a, b)
-    bkeys = _band_keys(sig, DEFAULT)
+    bkeys = _row_band_keys(base, offsets, DEFAULT, a, b)
     signed = base.view(np.int64)
 
     feats = []

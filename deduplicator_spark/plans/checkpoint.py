@@ -211,7 +211,6 @@ def run_pipeline_resumable(
     verify_pixels: bool = True,
     run_id: str = "run",
     stop_after: str | None = None,
-    validate_payloads: bool = True,
 ):
     """Checkpointed variant of plans.pipeline.run_pipeline.
 
@@ -239,19 +238,16 @@ def run_pipeline_resumable(
     store = StageStore(spark, root, cfg, run_id,
                        input_token=input_identity(images))
 
-    bad = None
-    digests = None
-    if validate_payloads:
-        if store.has("validate"):
-            feats = store.read("validate")
-        else:
-            feats = store.write("validate", validation_features(images))
-        if stop_after == "validate":
-            return None
-        bad = bad_ids_from_features(feats, cfg)
-        images = images.join(F.broadcast(bad), "image_id", "left_anti")
-        digests = feats.join(F.broadcast(bad), "image_id", "left_anti") \
-            .select("image_id", "digest")
+    if store.has("validate"):
+        feats = store.read("validate")
+    else:
+        feats = store.write("validate", validation_features(images))
+    if stop_after == "validate":
+        return None
+    bad = bad_ids_from_features(feats, cfg)
+    images = images.join(F.broadcast(bad), "image_id", "left_anti")
+    digests = feats.join(F.broadcast(bad), "image_id", "left_anti") \
+        .select("image_id", "digest")
 
     if store.has("edges"):
         edges = store.read("edges")

@@ -240,7 +240,7 @@ def curate_documents(docs: DataFrame, eval_docs: DataFrame,
     cands = candidate_pairs_from_bands(
         banded_from_prepared(prep),
         pair_cap=cfg.hot_band_threshold, salt_buckets=cfg.salt_buckets)
-    pairs = jaccard_verify(cands, prep, jaccard_t, col="sh_hashes")
+    pairs = jaccard_verify(cands, prep, jaccard_t)
     cc = connected_components(
         canonical_pairs(pairs.select("id_a", "id_b")),
         nodes=items.select("image_id"),

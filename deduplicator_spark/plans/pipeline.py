@@ -6,12 +6,11 @@ reference probes one record at a time against a frozen Lucene index, this runs
 the whole corpus through four similarity tiers as set-oriented jobs, then
 assigns every row a verdict + refers-to lineage in one pass.
 
-Payload-byte passes (the 100 TB cost driver): with validate_payloads=True the
-exact sha256 digest rides in the SAME Arrow decode pass as payload validation
+Payload-byte passes (the dominant cost at 100 TB): the exact sha256 digest
+rides in the SAME Arrow decode pass as payload validation
 (operators/media.image_features), so the full corpus bytes are read exactly
 ONCE up front; the only other byte read is the PSNR verification join, which
-touches candidate pairs only. With validation off, the exact tier's JVM
-sha2 scan is the single full read. Bytes are never cached.
+touches candidate pairs only. Bytes are never cached.
 """
 
 from __future__ import annotations
@@ -216,8 +215,7 @@ def run_pipeline(images: DataFrame, cfg: DedupConfig = DEFAULT,
                                            "near_caption", "containment"),
                  verify_pixels: bool = True,
                  run_id: str = "run",
-                 persist_input: bool = True,
-                 validate_payloads: bool = True) -> DedupResult:
+                 persist_input: bool = True) -> DedupResult:
     """persist_input=True caches the full input (right for synthesized or
     expensive-to-recompute inputs at sandbox scale). For a parquet/Iceberg
     source pass False: each tier then scans only its pruned columns from
@@ -227,15 +225,12 @@ def run_pipeline(images: DataFrame, cfg: DedupConfig = DEFAULT,
     projections the other tiers need are cached separately anyway."""
     if persist_input:
         images = images.persist()
-    bad = None
-    digests = None
-    if validate_payloads:
-        feats = validation_features(images).persist()
-        bad = bad_ids_from_features(feats, cfg)
-        # broadcast anti-join of the (tiny) bad set; no eager count needed
-        images = images.join(F.broadcast(bad), "image_id", "left_anti")
-        digests = feats.join(F.broadcast(bad), "image_id", "left_anti") \
-            .select("image_id", "digest")
+    feats = validation_features(images).persist()
+    bad = bad_ids_from_features(feats, cfg)
+    # broadcast anti-join of the (tiny) bad set; no eager count needed
+    images = images.join(F.broadcast(bad), "image_id", "left_anti")
+    digests = feats.join(F.broadcast(bad), "image_id", "left_anti") \
+        .select("image_id", "digest")
     edges = candidate_edges(images, cfg, tiers, verify_pixels,
                             digests=digests).persist()
     clusters = connected_components(

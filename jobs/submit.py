@@ -14,9 +14,8 @@ Cluster:
         jobs/submit.py run --input /data/images.parquet \
         --checkpoint-dir /ckpt --output /out
 
-Sandbox (the N vs 4N scaling evidence uses exactly this path —
-tools/submit_scaling.py):
-    spark-submit --master local[8] --py-files /tmp/dedup.zip \
+Local (BENCH/SUBMIT_SCALING.md measured N vs 4N through exactly this path):
+    spark-submit --master local[4] --py-files /tmp/dedup.zip \
         jobs/submit.py run --synth 24000 --no-verify
 
 All subcommands (synth / run / index / probe) and flags are cli.main's;

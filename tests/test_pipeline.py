@@ -112,3 +112,50 @@ def test_payload_validation_quarantines_corrupt_rows(spark, images_500):
     assert "zzz-corrupt-bytes" not in verdict_ids
     assert "zzz-lying-phash" not in verdict_ids
     assert len(verdict_ids) == 500
+
+
+_FIRST = "img-000000000000"
+
+
+def _copies(base, n):
+    one = base.filter(F.col("image_id") == _FIRST)
+    return (one.crossJoin(base.sparkSession.range(n))
+            .withColumn("image_id", F.format_string("copy-%02d", "id"))
+            .drop("id"))
+
+
+# case -> (derive from the 50-row corpus, input rows, exact duplicates).
+# Rows 0-49 are all planted bases, so the corpus itself has no duplicate.
+DEGENERATE = {
+    "empty": (lambda b: b.limit(0), 0, 0),
+    "one_row": (lambda b: b.filter(F.col("image_id") == _FIRST), 1, 0),
+    "forty_copies": (lambda b: _copies(b, 40), 40, 39),
+    "null_captions": (lambda b: b.withColumn("caption", F.lit(None).cast("string")), 50, 0),
+    "empty_captions": (lambda b: b.withColumn("caption", F.lit("")), 50, 0),
+}
+
+
+@pytest.fixture(scope="module")
+def images_50(spark):
+    from deduplicator_spark.synth import synthesize_images
+
+    df = synthesize_images(spark, 50).persist()
+    yield df
+    df.unpersist()
+
+
+@pytest.mark.parametrize("case", list(DEGENERATE))
+def test_degenerate_inputs_get_one_verdict_per_row(spark, images_50, case):
+    """Empty input, one row, an all-identical mega-bucket, and captions with
+    no tokens all finish with one verdict per input row. A caption with no
+    tokens shares nothing with another one, so it never forms a pair."""
+    derive, n_rows, n_dup = DEGENERATE[case]
+    res = run_pipeline(derive(images_50))
+    v = [r.asDict() for r in res.verdicts.collect()]
+    assert len(v) == n_rows
+    dups = [r for r in v if r["verdict"] == "duplicate"]
+    assert len(dups) == n_dup
+    assert all(r["dup_class"] == "exact" for r in dups)
+    assert sum(r["verdict"] == "novel" for r in v) == n_rows - n_dup
+    if n_dup == 0:
+        assert res.pairs.count() == 0

@@ -47,7 +47,7 @@ def test_prefix_equals_full_inverted_join(spark):
                 F.col("b.image_id").alias("id_b"))
     )
     want = {(r["id_a"], r["id_b"]): r["jaccard"]
-            for r in jaccard_verify(all_pairs, sh, 0.8, col="sh_hashes")
+            for r in jaccard_verify(all_pairs, sh, 0.8)
             .select("id_a", "id_b", "jaccard").collect()}
     assert got == want
     assert len(got) > 0  # the families actually produce J>=0.8 pairs

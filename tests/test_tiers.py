@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from deduplicator_spark.config import DEFAULT
 from deduplicator_spark.functions.hashing import (
-    minhash_signature,
     shingles,
     simhash64,
     tokens,
@@ -14,11 +13,7 @@ from deduplicator_spark.functions.hashing import (
 from deduplicator_spark.operators.candidates import candidate_pairs_from_bands
 from deduplicator_spark.operators.containment import containment_pairs, verify_substring_pairs
 from deduplicator_spark.operators.exact import exact_groups, exact_pairs
-from deduplicator_spark.operators.minhash import (
-    minhash_banded,
-    minhash_signatures_pandas,
-    near_caption_pairs,
-)
+from deduplicator_spark.operators.minhash import near_caption_pairs
 from deduplicator_spark.operators.simhash import near_image_pairs
 from deduplicator_spark.synth import _kind  # deterministic plant roles
 
@@ -48,25 +43,6 @@ def test_near_image_recall(spark, images_500):
     assert not missing, f"near-image copies missed by pHash banding: {sorted(missing)[:5]}"
 
 
-def test_minhash_column_vs_pandas_parity_on_band_collisions(spark, images_500):
-    """The two MinHash implementations use different hash families, so the
-    *signatures* differ, but both must produce identical candidate structure
-    for identical captions (hot template) and find the planted 1-edit pairs."""
-    col_pairs = candidate_pairs_from_bands(minhash_banded(images_500))
-    got = {(r["id_a"], r["id_b"]) for r in col_pairs.collect()}
-    planted = {
-        i for i in range(500) if _kind(i) == "near_caption"
-    }
-    found_b = {int(b.split("-")[1]) for _, b in got} | {int(a.split("-")[1]) for a, _ in got}
-    assert planted <= found_b
-
-
-def test_minhash_pandas_signature_shape(spark, images_500):
-    sig = minhash_signatures_pandas(images_500.limit(20))
-    rows = sig.collect()
-    assert all(len(r["sig"]) == DEFAULT.minhash_perms for r in rows)
-
-
 def test_arrow_tokenizer_matches_jvm_on_unicode_whitespace(spark):
     """prepared_features' Python re tokenizer must count tokens exactly like
     the JVM's split(trim, '\\s+') — including on NBSP/thin-space text, where
@@ -80,14 +56,17 @@ def test_arrow_tokenizer_matches_jvm_on_unicode_whitespace(spark):
         ("i2", "a b c d e f"),           # thin space inside a token
         ("i3", "\tplain  ascii text\n"),      # ASCII edge whitespace
         ("i4", "one two three four five six"),
+        ("i5", "one two three four five six"),  # identical to i4
     ]
     df = spark.createDataFrame(rows, "image_id string, caption string")
     jvm = {r["image_id"]: r["n"]
            for r in df.select("image_id",
                               F.size(tokens(F.col("caption"))).alias("n")).collect()}
-    arrow = {r["image_id"]: r["n_tok"]
-             for r in prepared_features(df, with_signatures=False).collect()}
-    assert arrow == jvm
+    feats = {r["image_id"]: r for r in prepared_features(df).collect()}
+    assert {i: r["n_tok"] for i, r in feats.items()} == jvm
+    # identical captions -> identical band keys, one per LSH band
+    assert feats["i4"]["band_keys"] == feats["i5"]["band_keys"]
+    assert len(feats["i4"]["band_keys"]) == DEFAULT.lsh_bands
 
 
 def test_near_caption_threshold_respected(spark, images_500):
@@ -250,9 +229,13 @@ def test_simhash_feature_parity(spark):
 
 
 def test_minhash_signature_identical_captions_identical_sigs(spark):
-    df = spark.createDataFrame([("x", "a b c d e f g"), ("y", "a b c d e f g")], "id string, c string")
-    sigs = df.select(minhash_signature(shingles(tokens(F.col("c")))).alias("s")).collect()
-    assert sigs[0]["s"] == sigs[1]["s"]
+    from deduplicator_spark.operators.minhash import _batch_signatures, _perm_coeffs
+    a, b = _perm_coeffs(DEFAULT)
+    sigs = _batch_signatures(["a b c d e f g", "a b c d e f g", "a b c d e f h"],
+                             DEFAULT, a, b)
+    assert sigs.shape == (3, DEFAULT.minhash_perms)
+    assert (sigs[0] == sigs[1]).all()
+    assert not (sigs[0] == sigs[2]).all()
 
 
 def test_candidate_cap_star_fallback(spark):

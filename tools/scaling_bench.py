@@ -3,8 +3,9 @@
 The north rule requires throughput scaling efficiency >= 0.8 between N and 4N
 executors. No real cluster exists in the sandbox, so per the driver
 instruction we run the SAME end-to-end dedup job on the SAME input at two
-local parallelism levels (default local[4] vs local[16]) and report
-throughput at both plus efficiency = (rate_4N / rate_N) / 4.
+local parallelism levels (default 24,000 images at local[1] vs local[4], the
+N-vs-4N pair a 4-core host offers) and report throughput at both plus
+efficiency = (rate_4N / rate_N) / 4.
 
 Measurement design — the host carries heavy EXTERNAL load (load average ~10
 with zero local processes), so:
@@ -21,10 +22,12 @@ with zero local processes), so:
   compile (a per-process constant, not a per-row cost) stays out of the
   steady-state number.
 
-Usage:
-    python tools/scaling_bench.py [n_images] [small_cores] [big_cores]
-Writes BENCH/BASELINE_LATEST.md (raw latest round; BENCH/BASELINE.md is the
-curated multi-round evidence doc, maintained by hand) and prints one JSON line.
+Usage (from the checkout root: Spark's Python workers import the package
+from the working directory):
+    python tools/scaling_bench.py [n_images=24000] [small_cores=1] [big_cores=4] [out_md]
+Writes out_md (default BENCH/BASELINE_LATEST.md in this checkout: the raw
+latest run; BENCH/BASELINE.md is the curated multi-round evidence doc,
+maintained by hand) and prints one JSON line.
 """
 
 from __future__ import annotations
@@ -34,7 +37,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 WARMUP_N = 2000
 REPEATS = 3
@@ -54,17 +58,14 @@ def _run_once(spark, images, n: int) -> tuple[float, int]:
 
 
 def main() -> None:
-    # defaults 2 vs 8: N and 4N per the north rule; the smaller pair both
-    # leaves headroom for this host's external neighbor load and keeps the
-    # parallel fraction dominant over per-job constants
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 320000
-    small = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    big = int(sys.argv[3]) if len(sys.argv) > 3 else 8
+    # defaults 1 vs 4: N and 4N per the north rule on a 4-core host
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 24000
+    small = int(sys.argv[2]) if len(sys.argv) > 2 else 1
+    big = int(sys.argv[3]) if len(sys.argv) > 3 else 4
     # secondary-pair runs write elsewhere so the primary evidence doc (with
     # its hand-written interpretation sections) is never clobbered
-    out_md = sys.argv[4] if len(sys.argv) > 4 else "/root/repo/BENCH/BASELINE_LATEST.md"
-
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
+    out_md = (sys.argv[4] if len(sys.argv) > 4
+              else os.path.join(REPO, "BENCH", "BASELINE_LATEST.md"))
 
     from deduplicator_spark.plans.pipeline import run_pipeline
     from deduplicator_spark.session import get_spark, stop_spark
@@ -117,7 +118,7 @@ def main() -> None:
     }
     print(json.dumps(summary))
 
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(os.path.dirname(os.path.abspath(out_md)), exist_ok=True)
     with open(out_md, "w") as f:
         f.write(f"""# Scaling evidence — N vs 4N parallelism (sandbox stand-in)
 
