@@ -46,7 +46,8 @@ def simhash64(toks: Column, feature_hash=None) -> Column:
     """64-bit SimHash over a token/feature array, as a single long.
 
     For each bit i: sign of sum over features of (bit_i(hash(f)) ? +1 : -1).
-    Expressed as 64 aggregate() folds — all codegen.
+    Expressed as 64 aggregate() folds. A row with no tokens (null, or only
+    empty strings as from blank text) gets null.
 
     ``feature_hash`` maps a token Column to a 64-bit long Column; default
     xxhash64 (JVM fast path). An engine-portable hash (e.g. md5-derived)
@@ -71,7 +72,8 @@ def simhash64(toks: Column, feature_hash=None) -> Column:
         out = out.bitwiseOR(
             F.when(bit_sum(i) > 0, bit).otherwise(F.lit(0).cast("long"))
         )
-    return out
+    # no tokens (null array, or only empty strings) -> null, never a pair
+    return F.when(F.exists(toks, lambda t: t != ""), out)
 
 
 def hamming64(a: Column, b: Column) -> Column:

@@ -3,9 +3,8 @@
 The reference canonicalizes on BOTH paths with OpenWayback's
 AggressiveUrlCanonicalizer: write side IndexBuilder.java:57,194-199, read
 side DeDuplicator.java:120,158 (dep deduplicator-commons/pom.xml:36-40).
-Re-expressed as a deterministic regexp_replace chain (no Python, no UDF —
-whole-stage codegen end to end), implementing the canonicalizer's documented
-core rules:
+Re-expressed as a deterministic regexp_replace chain (no Python, no UDF),
+implementing the canonicalizer's documented core rules:
 
   * lowercase the whole URL
   * strip the fragment
@@ -28,13 +27,17 @@ flag) so the driver's oracle and the Spark plan can never drift. The two
 structured rules (query sort, host normalization) need list/arithmetic ops
 the regex table can't express; they are rendered per dialect from shared
 regex constants, with parity enforced by the canonicalize_urls oracle and
-the idempotence property test.
+the idempotence property test. Each structured rule reads its input
+several times, so it binds the input once with `let`: the expression stays
+linear in size when the canonicalizer is composed with itself.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .let import let
 
 _SESSION_PARAMS = r"(?:jsessionid|phpsessid|aspsessionid[a-z0-9]*|sessionid|sid|cfid|cftoken)"
 
@@ -50,8 +53,8 @@ _RULES: tuple[tuple[str, str], ...] = (
     (r"([?&])" + _SESSION_PARAMS + r"=[^&]*&", "{g1}"),   # second pass (adjacent)
     (r"[?&]" + _SESSION_PARAMS + r"=[^&]*$", ""),        # query session (tail)
     (r"^(https?://)www\d*\.", "{g1}"),                    # www host label
-    (r"^(http://[^/:]+):80(/|$)", "{g1}{g2}"),             # default http port
-    (r"^(https://[^/:]+):443(/|$)", "{g1}{g2}"),           # default https port
+    (r"^(http://[^/:]+):80(/|\?|$)", "{g1}{g2}"),          # default http port
+    (r"^(https://[^/:]+):443(/|\?|$)", "{g1}{g2}"),        # default https port
     (r"\?$", ""),                                        # dangling '?'
     (r"([^/])/+$", "{g1}"),                               # trailing slashes
 )
@@ -70,25 +73,33 @@ _IP_MAX = 4294967296                     # 2^32
 def _sort_query(u: Column) -> Column:
     """Alphabetical query-arg re-ordering (AggressiveUrlCanonicalizer's
     query-sort rule): split on '&', binary-sort, re-join."""
-    q = F.regexp_extract(u, _QUERY_PAT, 1)
-    base = F.regexp_extract(u, _PREQ_PAT, 0)
-    sorted_q = F.array_join(F.array_sort(F.split(q, "&")), "&")
-    return F.when(q == "", u).otherwise(F.concat(base, F.lit("?"), sorted_q))
+    def sort(u: Column) -> Column:
+        q = F.regexp_extract(u, _QUERY_PAT, 1)
+        base = F.regexp_extract(u, _PREQ_PAT, 0)
+        sorted_q = F.array_join(F.array_sort(F.split(q, "&")), "&")
+        return F.when(q == "", u).otherwise(F.concat(base, F.lit("?"), sorted_q))
+    return let(u, sort)
 
 
 def _normalize_host(u: Column) -> Column:
     """Decimal / 0x-hex IPv4 host -> dotted quad (http://2130706433/ and
     http://0x7f000001/ both -> http://127.0.0.1/)."""
-    host = F.regexp_extract(u, _HOST_PAT, 1)
-    n = (
-        F.when(host.rlike(_DEC_HOST), host.try_cast("bigint"))
-        .when(host.rlike(_HEX_HOST),
-              F.conv(F.substring(host, 3, 8), 16, 10).try_cast("bigint"))
-    )
-    octet = lambda k: (F.shiftright(n, k).bitwiseAND(F.lit(255))).cast("string")
-    dotted = F.concat_ws(".", octet(24), octet(16), octet(8), octet(0))
-    fixed = F.regexp_replace(u, _HOST_SUB_PAT, F.concat(F.lit("$1"), dotted))
-    return F.when(n.isNotNull() & (n < _IP_MAX), fixed).otherwise(u)
+    def to_int(host: Column) -> Column:
+        return (
+            F.when(host.rlike(_DEC_HOST), host.try_cast("bigint"))
+            .when(host.rlike(_HEX_HOST),
+                  F.conv(F.substring(host, 3, 8), 16, 10).try_cast("bigint"))
+        )
+
+    def normalize(u: Column, n: Column) -> Column:
+        octet = lambda k: (F.shiftright(n, k).bitwiseAND(F.lit(255))).cast("string")
+        dotted = F.concat_ws(".", octet(24), octet(16), octet(8), octet(0))
+        fixed = F.regexp_replace(u, _HOST_SUB_PAT, F.concat(F.lit("$1"), dotted))
+        return F.when(n.isNotNull() & (n < _IP_MAX), fixed).otherwise(u)
+
+    return let(u, lambda u: let(
+        F.regexp_extract(u, _HOST_PAT, 1),
+        lambda host: let(to_int(host), lambda n: normalize(u, n))))
 
 
 def canonicalize_url(url: Column) -> Column:

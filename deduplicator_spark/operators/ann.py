@@ -1,22 +1,24 @@
-"""Approximate nearest neighbors over embedding columns.
+"""Near neighbours over embedding columns.
 
-Two paths (SURVEY/graft requirement "similarity search"):
+Two structures, both exact integer arithmetic on quantized vectors:
 
-- brute-force cosine top-k (entry_queries.q_embedding_topk) — the exact
-  baseline: broadcast the small query side, one pass over the corpus.
-- hyperplane-LSH bucketed top-k (here) — the scale path: each vector gets a
-  b-bit signature (sign of dot with b fixed hyperplanes); the candidate join
-  is an equi-join on the bucket id, multi-probed on the query side (all
-  Hamming<=R flips) for recall. Corpus pass cost drops from O(n·q) to
-  O(n + q·bucket_size).
+- hyperplane-LSH near-duplicate self-join (``cosine_neardup_pairs``, the
+  embedding dedup tier; ``streaming/ann_probe.py`` probes the same buckets):
+  each vector gets a b-bit signature (sign of dot with b fixed
+  hyperplanes); the candidate join is an equi-join on the bucket id,
+  multi-probed (all Hamming<=R flips) for recall, and exact cosine verifies
+  candidates. Cost is O(n + collisions), never an all-pairs cross join.
+- IVF-flat top-k (``ann_topk_ivf``): data-derived coarse centroids, an
+  equi-join on centroid id, exact cosine ranking. ``plans/ann_index.py``
+  persists this structure as an index that later increments append to.
 
-Scale knobs (all mirrored bit-for-bit in the generated DuckDB oracle):
+LSH scale knobs (all mirrored bit-for-bit in the generated DuckDB oracle):
 - ``n_planes``: 8 -> 256 buckets suits a 10^3-10^4-vector sandbox corpus;
-  at web scale raise to 16-24 so buckets stay bounded (tests exercise 16).
-- ``probe_radius``: query-side multiprobe Hamming radius (1 by default;
+  at web scale raise to 16-24 so buckets stay bounded (tests exercise both).
+- ``probe_radius``: probe-side multiprobe Hamming radius (1 by default;
   2 recovers recall when the plane count outgrows the corpus).
-- ``bucket_cap``: deterministic per-bucket corpus cap (smallest vec_ids win)
-  so one mega-bucket of near-identical embeddings cannot explode the
+- ``bucket_cap``: deterministic per-bucket build-side cap (smallest vec_ids
+  win) so one mega-bucket of near-identical embeddings cannot explode the
   candidate join — the ANN analog of the LSH tier's star fallback.
 
 Determinism contract: hyperplanes are INTEGER-valued (seeded PCG64) and the
@@ -104,49 +106,6 @@ def _cos(a: str, b: str):
     return dot / (norm(F.col(a)) * norm(F.col(b)))
 
 
-def ann_topk_lsh(emb: DataFrame, dim: int, k: int = 5, n_queries: int = 20,
-                 vec_col: str = "embedding", id_col: str = "vec_id",
-                 n_planes: int = ANN_PLANES, probe_radius: int = 1,
-                 bucket_cap: int = ANN_BUCKET_CAP,
-                 seed: int = ANN_SEED) -> DataFrame:
-    """LSH-bucketed approximate top-k: (query_id, neighbor_id, rank, cos).
-
-    The corpus side is computed ONCE (no persist needed): the query side is
-    its own pruned scan (filter pushed below the signature UDF), so nothing
-    is evaluated twice. Mega-buckets are capped deterministically at
-    ``bucket_cap`` members (smallest ids kept) before the candidate join.
-    """
-    base = emb.select(id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("v"))
-
-    # query set = the n_queries SMALLEST ids (no contiguous-id assumption;
-    # TakeOrderedAndProject + broadcast semi-join, pushed below the UDF)
-    qids = base.orderBy(F.col(id_col).asc()).limit(n_queries).select(id_col)
-    queries = (
-        with_lsh_bucket(base.join(F.broadcast(qids), id_col, "left_semi"), dim,
-                        vec_col="v", n_planes=n_planes, seed=seed)
-        .select(F.col(id_col).alias("query_id"), F.col("v").alias("qv"),
-                F.explode(multiprobe_buckets(F.col("bucket"), n_planes,
-                                             probe_radius)).alias("bucket"))
-    )
-    corpus = cap_per_key(
-        with_lsh_bucket(base, dim, vec_col="v", n_planes=n_planes, seed=seed),
-        ["bucket"], [F.col(id_col).asc()], bucket_cap)
-    cands = F.broadcast(queries).join(corpus.select(id_col, "v", "bucket"), "bucket") \
-        .filter(F.col(id_col) != F.col("query_id"))
-
-    scored = cands.select(
-        "query_id", F.col(id_col).alias("neighbor_id"),
-        _cos("qv", "v").alias("cos"),
-    ).distinct()  # a pair can collide in several probed buckets
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(),
-                                               F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"),
-                F.round("cos", 6).alias("cos"))
-    )
-
 
 def cosine_neardup_pairs(emb: DataFrame, dim: int, threshold: float = 0.95,
                          vec_col: str = "embedding", id_col: str = "vec_id",
@@ -160,8 +119,8 @@ def cosine_neardup_pairs(emb: DataFrame, dim: int, threshold: float = 0.95,
     equi-join on bucket (O(n + collisions)), never an all-pairs cross join;
     exact cosine verifies candidates. Recall comes from plane count + probe
     radius (planted-truth pytest pins >= 0.95 for near-identical vectors);
-    determinism is the same integer-plane contract as ann_topk_lsh, so the
-    generated DuckDB oracle is bit-identical.
+    determinism is the integer-plane contract in the module docstring, so
+    the generated DuckDB oracle is bit-identical.
 
     The build side is capped per bucket (mega-bucket guard) but the PROBE
     side is the UNCAPPED signature frame: a member beyond the cap in its
@@ -247,30 +206,6 @@ SELECT id_a, id_b, round(cos, 6) AS cos FROM pairs WHERE cos >= {threshold}
 IVF_NLIST = 16
 IVF_NPROBE = 4
 
-
-def alignment_filter(items: DataFrame, threshold: float = 0.9,
-                     id_col: str = "item_id", img_col: str = "image_v",
-                     cap_col: str = "caption_v") -> DataFrame:
-    """CLIP-score-style multimodal alignment gate (the LAION-style curation
-    step): each item carries an image-modality embedding and a
-    caption-modality embedding; keep the pair only when the cosine between
-    them clears ``threshold``. Emits (id, alignment, keep) — annotate, not
-    drop, so callers can audit the gate (the reference's
-    DeDuplicator.java:183-188 verdict-annotation philosophy applied to a
-    similarity score).
-
-    Scale shape: pure per-row Column algebra over already-joined modality
-    vectors — no shuffle, no UDF; at 10^12 rows this pipelines inside
-    whole-stage codegen on the scan. ``keep`` compares the ROUNDED score so
-    the decision is reproducible cross-engine (a last-ulp fold-order
-    difference cannot flip a verdict at the threshold).
-    """
-    aligned = F.round(_cos(img_col, cap_col), 6)
-    return items.select(
-        id_col,
-        aligned.alias("alignment"),
-        (aligned >= F.lit(threshold)).alias("keep"),
-    )
 
 
 def _dotq(a, b):
@@ -382,302 +317,3 @@ FROM (
   FROM cands
 ) WHERE rank <= {k}
 """
-
-
-def ann_lsh_oracle_sql(dim: int, k: int = 5, n_queries: int = 20,
-                       n_planes: int = ANN_PLANES, probe_radius: int = 1,
-                       bucket_cap: int = ANN_BUCKET_CAP,
-                       seed: int = ANN_SEED) -> str:
-    """DuckDB SQL implementing the IDENTICAL algorithm (same integer planes,
-    same quantization, same multiprobe masks, same bucket cap), generated
-    from the same numpy seed."""
-    planes = lsh_planes(dim, n_planes, seed)
-    values = ",\n    ".join(
-        f"({i}, {planes[i].tolist()})" for i in range(n_planes)
-    )
-    masks = ", ".join(str(m) for m in _flip_masks(n_planes, probe_radius))
-    return f"""
-WITH eq AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(round(x * {ANN_QUANT}) AS BIGINT)) AS vq
-  FROM embeddings
-),
-planes(idx, p) AS (VALUES
-    {values}
-),
-sig AS (
-  SELECT vec_id, v,
-         CAST(sum(CASE WHEN list_dot_product(vq, p) > 0 THEN 1 << idx ELSE 0 END) AS BIGINT) AS bucket
-  FROM eq CROSS JOIN planes GROUP BY vec_id, v
-),
-corpus AS (
-  SELECT vec_id, v, bucket FROM (
-    SELECT vec_id, v, bucket,
-           row_number() OVER (PARTITION BY bucket ORDER BY vec_id ASC) AS bn
-    FROM sig
-  ) WHERE bn <= {bucket_cap}
-),
-probes AS (
-  SELECT vec_id AS query_id, v AS qv, xor(bucket, CAST(m AS BIGINT)) AS bucket
-  FROM sig CROSS JOIN (SELECT unnest([{masks}]) AS m) t
-  WHERE vec_id IN (SELECT vec_id FROM eq ORDER BY vec_id ASC LIMIT {n_queries})
-),
-scored AS (
-  SELECT DISTINCT p.query_id, s.vec_id AS neighbor_id,
-         list_dot_product(p.qv, s.v)
-           / (sqrt(list_dot_product(p.qv, p.qv)) * sqrt(list_dot_product(s.v, s.v))) AS cos
-  FROM probes p JOIN corpus s USING (bucket)
-  WHERE s.vec_id <> p.query_id
-)
-SELECT query_id, neighbor_id, rank, round(cos, 6) AS cos
-FROM (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rank
-  FROM scored
-) WHERE rank <= {k}
-"""
-
-
-# --------------------------------------------------------------------------
-# IVF-PQ: product-quantized inverted file — the memory-bounded ANN scale path
-# --------------------------------------------------------------------------
-
-IVFPQ_NSUB = 4   # subspaces (dim must divide evenly)
-IVFPQ_KSUB = 16  # codebook entries per subspace
-
-
-def ann_topk_ivfpq(emb: DataFrame, dim: int, k: int = 5, n_queries: int = 20,
-                   nlist: int = IVF_NLIST, nprobe: int = IVF_NPROBE,
-                   nsub: int = IVFPQ_NSUB, ksub: int = IVFPQ_KSUB,
-                   rerank: int = 0,
-                   vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
-    """IVF-PQ approximate top-k: (query_id, neighbor_id, rank, adist) — or,
-    with ``rerank=R > 0``, the refine variant (query_id, neighbor_id, rank,
-    cos): the top-R candidates per query by quantized ADC distance are
-    re-ranked by EXACT cosine (the standard IVF-PQ+refine recipe; exact math
-    touches only O(n_queries * R) vectors, never the corpus).
-
-    Why this exists at 10^12 scale: IVF-flat ships FULL vectors (2 KB of
-    floats for a 512-d embedding) through the candidate join; IVF-PQ ships
-    ``nsub`` small ints per vector — the database side of the join is
-    (neighbor_id, cid, j, code_id), ~32 bytes/row regardless of dim, and the
-    distance arithmetic collapses into a broadcast ADC lookup table of
-    n_queries*nprobe*nsub*ksub precomputed entries (Jegou et al., "Product
-    Quantization for Nearest Neighbor Search", TPAMI 2011). The big join
-    never touches an embedding.
-
-    Determinism contract (cross-engine, same as ann_topk_ivf): no k-means —
-    coarse centroids are the ``nlist`` smallest-id vectors; per-subspace
-    codebooks are the residual subvectors of the ``ksub`` smallest-id
-    NON-centroid vectors (code_id = rank by id). Everything downstream is
-    exact int64 arithmetic on round(x*1000) quantized values: residuals,
-    squared-L2 encode argmin (ties -> smallest code_id), ADC partial sums.
-    The DuckDB twin (ann_ivfpq_oracle_sql) hash-matches bit for bit.
-
-    Plan shape: two bounded broadcast cross joins (nlist / nsub*ksub rows),
-    one equi-join of the compressed codes against the broadcast LUT on
-    (cid, j, code_id), one partial-aggregable groupBy sum. O(n*(nlist +
-    ksub*nsub)) encode work, O(candidates*nsub) scan work, zero full-vector
-    shuffles.
-    """
-    sub = dim // nsub
-    if sub * nsub != dim:
-        raise ValueError(f"dim {dim} not divisible by nsub {nsub}")
-    eq = emb.select(
-        id_col,
-        F.transform(vec_col, lambda x:
-                    F.round(x.cast("double") * ANN_QUANT).cast("long")).alias("vq"),
-    )
-    cent = eq.orderBy(F.col(id_col).asc()).limit(nlist).select(
-        F.col(id_col).alias("cid"), F.col("vq").alias("cq"))
-    scored = eq.crossJoin(F.broadcast(cent)).select(
-        id_col, "vq", "cid", "cq",
-        (_dotq(F.col("vq"), F.col("cq")).cast("double")
-         / F.sqrt(_dotq(F.col("cq"), F.col("cq")).cast("double"))).alias("score"),
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), F.col("cid").asc())
-    ranked = scored.withColumn("crank", F.row_number().over(w))
-    resid = F.zip_with(F.col("vq"), F.col("cq"), lambda x, y: x - y)
-    assign = ranked.filter(F.col("crank") == 1).select(id_col, "cid", resid.alias("rq"))
-
-    # (id, cid, j, rsub): residual split into nsub contiguous subvectors
-    slices = F.array(*[F.slice(F.col("rq"), j * sub + 1, sub) for j in range(nsub)])
-    db_sub = assign.select(id_col, "cid", F.posexplode(slices).alias("j", "rsub"))
-
-    # per-subspace codebook: residual subvectors of the ksub smallest-id
-    # non-centroid vectors (centroid residuals are degenerate zeros)
-    cb_src = (assign.join(F.broadcast(cent.select(F.col("cid").alias("_cent_id"))),
-                          F.col(id_col) == F.col("_cent_id"), "left_anti")
-              .orderBy(F.col(id_col).asc()).limit(ksub))
-    wc = Window.orderBy(F.col(id_col).asc())  # ksub rows: single-task is fine
-    codebook = (cb_src.withColumn("code_id", F.row_number().over(wc) - 1)
-                .select("code_id", F.posexplode(slices).alias("j", "csub")))
-
-    l2 = F.aggregate(F.zip_with(F.col("rsub"), F.col("csub"),
-                                lambda x, y: (x - y) * (x - y)),
-                     F.lit(0).cast("long"), lambda a, x: a + x)
-    # encode: argmin codebook entry per (vector, subspace)
-    enc = (db_sub.join(F.broadcast(codebook), "j")
-           .select(id_col, "cid", "j", "code_id", l2.alias("d")))
-    we = Window.partitionBy(id_col, "j").orderBy(F.col("d").asc(), F.col("code_id").asc())
-    db_codes = (enc.withColumn("_rn", F.row_number().over(we)).filter(F.col("_rn") == 1)
-                .select(F.col(id_col).alias("neighbor_id"), "cid", "j", "code_id"))
-
-    # query side: residual wrt EACH probed centroid, then the ADC table
-    qids = eq.orderBy(F.col(id_col).asc()).limit(n_queries).select(id_col)
-    qprobe = (ranked.join(F.broadcast(qids), id_col, "left_semi")
-              .filter(F.col("crank") <= nprobe)
-              .select(F.col(id_col).alias("query_id"), "cid", resid.alias("rq")))
-    q_sub = qprobe.select("query_id", "cid", F.posexplode(slices).alias("j", "rsub"))
-    lut = (q_sub.join(F.broadcast(codebook), "j")
-           .select("query_id", "cid", "j", "code_id", l2.alias("part")))
-
-    adist = (db_codes.join(F.broadcast(lut), ["cid", "j", "code_id"])
-             .filter(F.col("neighbor_id") != F.col("query_id"))
-             .groupBy("query_id", "neighbor_id")
-             .agg(F.sum("part").alias("adist")))
-    wq = Window.partitionBy("query_id").orderBy(F.col("adist").asc(),
-                                                F.col("neighbor_id").asc())
-    if rerank <= 0:
-        return (adist.withColumn("rank", F.row_number().over(wq))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "neighbor_id",
-                        F.col("rank").cast("long").alias("rank"),
-                        F.col("adist").cast("long").alias("adist")))
-
-    # refine: exact cosine over ONLY the top-`rerank` ADC candidates per
-    # query — the standard IVF-PQ+refine recipe (quantized scan prunes the
-    # corpus, exact math touches O(n_queries * rerank) vectors). This makes
-    # recall monotone in nprobe again (raw ADC ranking is not: coarse
-    # distances of extra probed lists can spuriously beat true neighbors).
-    top_r = (adist.withColumn("_rr", F.row_number().over(wq))
-             .filter(F.col("_rr") <= rerank).select("query_id", "neighbor_id"))
-    ev = emb.select(id_col,
-                    F.transform(vec_col, lambda x: x.cast("double")).alias("v"))
-    cand = (top_r
-            .join(ev.select(F.col(id_col).alias("query_id"),
-                            F.col("v").alias("qv")), "query_id")
-            .join(ev.select(F.col(id_col).alias("neighbor_id"),
-                            F.col("v").alias("nv")), "neighbor_id"))
-    out = cand.select("query_id", "neighbor_id",
-                      _cos("qv", "nv").alias("cos"))
-    wk = Window.partitionBy("query_id").orderBy(F.col("cos").desc(),
-                                                F.col("neighbor_id").asc())
-    return (out.withColumn("rank", F.row_number().over(wk))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id",
-                    F.col("rank").cast("long").alias("rank"),
-                    F.round("cos", 6).alias("cos")))
-
-
-def ann_ivfpq_oracle_sql(dim: int, k: int = 5, n_queries: int = 20,
-                         nlist: int = IVF_NLIST, nprobe: int = IVF_NPROBE,
-                         nsub: int = IVFPQ_NSUB, ksub: int = IVFPQ_KSUB,
-                         rerank: int = 0) -> str:
-    """DuckDB twin of ann_topk_ivfpq — same data-derived centroids/codebooks,
-    same int64 residual/ADC arithmetic (and, with rerank>0, the same exact
-    double-cosine refine), so values hash-match exactly."""
-    sub = dim // nsub
-    subs = ", ".join(f"({j}, {j * sub + 1}, {(j + 1) * sub})" for j in range(nsub))
-    if rerank > 0:
-        final = _IVFPQ_RERANK_FINAL.format(rerank=rerank, k=k)
-        comma = ","
-    else:
-        final = _IVFPQ_RAW_FINAL.format(k=k)
-        comma = ""
-    return f"""
-WITH eq AS (
-  SELECT vec_id,
-         list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(round(x * {ANN_QUANT}) AS BIGINT)) AS vq
-  FROM embeddings
-),
-cent AS (SELECT vec_id AS cid, vq AS cq FROM eq ORDER BY vec_id ASC LIMIT {nlist}),
-ranked AS (
-  SELECT eq.vec_id, eq.vq, cent.cid, cent.cq,
-         row_number() OVER (PARTITION BY eq.vec_id ORDER BY
-           CAST(list_dot_product(eq.vq, cent.cq) AS DOUBLE)
-             / sqrt(CAST(list_dot_product(cent.cq, cent.cq) AS DOUBLE)) DESC,
-           cent.cid ASC) AS crank
-  FROM eq CROSS JOIN cent
-),
-assign AS (
-  SELECT vec_id, cid,
-         list_transform(range(1, {dim + 1}), i -> vq[i] - cq[i]) AS rq
-  FROM ranked WHERE crank = 1
-),
-subs(j, lo, hi) AS (VALUES {subs}),
-db_sub AS (SELECT vec_id, cid, j, rq[lo:hi] AS rsub FROM assign CROSS JOIN subs),
-cbq AS (
-  SELECT vec_id, rq FROM assign
-  WHERE vec_id NOT IN (SELECT cid FROM cent)
-  ORDER BY vec_id ASC LIMIT {ksub}
-),
-codebook AS (
-  SELECT code_id, j, rq[lo:hi] AS csub
-  FROM (SELECT rq, row_number() OVER (ORDER BY vec_id ASC) - 1 AS code_id FROM cbq)
-  CROSS JOIN subs
-),
-enc AS (
-  SELECT d.vec_id, d.cid, d.j, c.code_id,
-         CAST(list_dot_product(d.rsub, d.rsub)
-              - 2 * list_dot_product(d.rsub, c.csub)
-              + list_dot_product(c.csub, c.csub) AS BIGINT) AS dist
-  FROM db_sub d JOIN codebook c USING (j)
-),
-db_codes AS (
-  SELECT vec_id AS neighbor_id, cid, j, code_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, j ORDER BY dist ASC, code_id ASC) AS rn
-    FROM enc
-  ) WHERE rn = 1
-),
-qprobe AS (
-  SELECT vec_id AS query_id, cid,
-         list_transform(range(1, {dim + 1}), i -> vq[i] - cq[i]) AS rq
-  FROM ranked
-  WHERE crank <= {nprobe}
-    AND vec_id IN (SELECT vec_id FROM eq ORDER BY vec_id ASC LIMIT {n_queries})
-),
-q_sub AS (SELECT query_id, cid, j, rq[lo:hi] AS rsub FROM qprobe CROSS JOIN subs),
-lut AS (
-  SELECT q.query_id, q.cid, q.j, c.code_id,
-         CAST(list_dot_product(q.rsub, q.rsub)
-              - 2 * list_dot_product(q.rsub, c.csub)
-              + list_dot_product(c.csub, c.csub) AS BIGINT) AS part
-  FROM q_sub q JOIN codebook c USING (j)
-),
-adist AS (
-  SELECT l.query_id, d.neighbor_id, CAST(sum(part) AS BIGINT) AS adist
-  FROM db_codes d JOIN lut l USING (cid, j, code_id)
-  WHERE d.neighbor_id <> l.query_id
-  GROUP BY 1, 2
-){comma}
-{final}
-"""
-
-_IVFPQ_RAW_FINAL = """SELECT query_id, neighbor_id, rank, adist FROM (
-  SELECT query_id, neighbor_id, adist,
-         row_number() OVER (PARTITION BY query_id ORDER BY adist ASC, neighbor_id ASC) AS rank
-  FROM adist
-) WHERE rank <= {k}"""
-
-_IVFPQ_RERANK_FINAL = """topr AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY adist ASC, neighbor_id ASC) AS rr
-    FROM adist
-  ) WHERE rr <= {rerank}
-),
-ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-rescored AS (
-  SELECT t.query_id, t.neighbor_id,
-         list_dot_product(q.v, n.v)
-           / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(n.v, n.v))) AS cos
-  FROM topr t
-  JOIN ev q ON q.vec_id = t.query_id
-  JOIN ev n ON n.vec_id = t.neighbor_id
-)
-SELECT query_id, neighbor_id, rank, round(cos, 6) AS cos FROM (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rank
-  FROM rescored
-) WHERE rank <= {k}"""

@@ -57,13 +57,17 @@ def simhash_features(items: DataFrame, id_col: str = "item_id",
     tokens), so batched numpy wins by >10x on real corpora (same trade as
     the MinHash signature path, operators/minhash.py).
 
-    Per batch: tokenize (whitespace, matching split(trim, '\\s+') — empty
-    text collapses to [''] like both SQL dialects), hash every token once
-    (md5_hash=True: the engine-portable 60-bit md5-derived hash, exactly
-    ``CAST('0x' || substr(md5(w),1,15) AS BIGINT)`` on DuckDB, enabling
-    integer-exact cross-engine oracles; default: pd.util.hash_array, the
-    fast path), then fold sign-sums for all 64 bits with one
-    ``np.add.reduceat`` over the flat (tokens x 64) sign matrix."""
+    Per batch: tokenize (whitespace, matching split(trim, '\\s+')), hash
+    every token once (md5_hash=True: the engine-portable 60-bit md5-derived
+    hash, exactly ``CAST('0x' || substr(md5(w),1,15) AS BIGINT)`` on DuckDB,
+    enabling integer-exact cross-engine oracles; default:
+    pd.util.hash_array, the fast path), then fold sign-sums for all 64 bits with one
+    ``np.add.reduceat`` over the flat (tokens x 64) sign matrix.
+
+    Text with no tokens (null, empty or whitespace-only) gets a null
+    simhash — the rule captions follow in operators/minhash.py. Its band
+    keys are null and its Hamming distance to anything is null, so it never
+    pairs."""
     import hashlib
 
     from collections.abc import Iterator
@@ -88,10 +92,13 @@ def simhash_features(items: DataFrame, id_col: str = "item_id",
                 # re.ASCII pins \s to the JVM/RE2 dialect ([ \t\n\v\f\r]);
                 # Python's default Unicode \s would also split on NBSP /
                 # U+2009 etc. and diverge on real-world scraped text
-                toks = re.split(r"\s+", text.strip(" "), flags=re.ASCII)
-                flat.extend(toks)
+                toks = re.split(r"\s+", text.strip(" "), flags=re.ASCII) \
+                    if text is not None else []
+                if any(toks):
+                    flat.extend(toks)
                 offsets.append(len(flat))
             offs = np.asarray(offsets[:-1], dtype=np.intp)
+            has_tok = np.diff(offsets) > 0
             # hash each DISTINCT token once per batch (corpora are Zipfian —
             # stopwords dominate), then scatter back through the codes
             codes, uniques = pd.factorize(np.asarray(flat, dtype=object))
@@ -105,14 +112,17 @@ def simhash_features(items: DataFrame, id_col: str = "item_id",
             # sign-sum per bit == 2*popcount - n_tokens; keep the bit matrix
             # uint8 (8x smaller than int32 signs) and widen only in reduceat
             bits = ((h[:, None] >> shifts) & 1).astype(np.uint8)
-            ones = np.add.reduceat(bits, offs, axis=0, dtype=np.int64)
-            ntok = np.diff(np.append(offs, len(flat)))
+            # reduceat over the non-empty segments only: an empty segment
+            # would return the next row's first element
+            starts = offs[has_tok]
+            ones = np.add.reduceat(bits, starts, axis=0, dtype=np.int64) \
+                if len(starts) else np.zeros((0, 64), dtype=np.int64)
+            ntok = np.diff(np.append(starts, len(flat)))
             sim = (((ones * 2 - ntok[:, None]) > 0).astype(np.uint64)
                    << shifts).sum(axis=1, dtype=np.uint64)
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "simhash": sim.view(np.int64),
-            })
+            out = pd.Series(pd.NA, index=pdf.index, dtype="Int64")
+            out[has_tok] = sim.view(np.int64)
+            yield pd.DataFrame({id_col: pdf[id_col], "simhash": out})
 
     return items.select(id_col, text_col).mapInPandas(
         gen, schema=f"{id_col} {items.schema[id_col].dataType.simpleString()}, simhash long")

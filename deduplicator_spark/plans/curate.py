@@ -48,8 +48,9 @@ from ..operators.minhash import (
     prepared_features,
 )
 
-# Quality-gate thresholds: shared single source with entry_queries
-# q_quality_scores (same buckets, same precedence).
+# Quality-gate thresholds: the one home of the bucket rule. The
+# curate_corpus oracle (entry_queries._CURATE_SQL) mirrors the same buckets
+# and precedence.
 MIN_TOKENS = 20
 MIN_TTR = 0.3
 MIN_STOP_RATIO = 0.05
@@ -61,8 +62,8 @@ DROPPED = "dropped"
 
 def quality_reason(tok_col) -> F.Column:
     """NULL when the document passes the gate, else the first failing
-    bucket in fixed precedence order (short > repetitive > no_stopwords) —
-    the q_quality_scores bucket rule as a drop reason."""
+    bucket in fixed precedence order (short > repetitive > no_stopwords),
+    as a drop reason."""
     dtoks = F.array_distinct(tok_col)
     ttr = F.size(dtoks) / F.size(tok_col)
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])

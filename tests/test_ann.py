@@ -1,13 +1,13 @@
-"""ANN scale-path hardening: the hyperplane-LSH top-k must keep recall when
-the plane count is raised to web-scale settings (16 planes = 65536 buckets)
-with radius-2 multiprobe, and the bucket cap must bound candidate fan-out
-deterministically."""
+"""ANN scale-path hardening: the hyperplane-LSH near-dup self-join must keep
+recall when the plane count is raised to web-scale settings (16 planes =
+65536 buckets, 24 planes = 16M) with radius-2 multiprobe, and the bucket cap
+must bound candidate fan-out without exempting any vector from dedup. The
+IVF top-k and its persisted lifecycle must agree bit for bit."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 
 def _clustered_embeddings(spark, n_bases=20, copies=4, dim=32, seed=11):
@@ -31,28 +31,6 @@ def _clustered_embeddings(spark, n_bases=20, copies=4, dim=32, seed=11):
     return df, copy_of
 
 
-@pytest.mark.parametrize("n_planes", [16, 24])
-def test_ann_planes_recall(spark, n_planes):
-    """At 16 AND 24 planes + radius-2 multiprobe, every query's planted
-    copies are found and ranked by cosine — recall@copies >= 0.95 over
-    planted truth (the 100x-scale knob band; curve in BENCH/ANN_RECALL.md)."""
-    from deduplicator_spark.operators.ann import ann_topk_lsh
-
-    emb, copy_of = _clustered_embeddings(spark)
-    out = ann_topk_lsh(emb, dim=32, k=4, n_queries=20,
-                       n_planes=n_planes, probe_radius=2).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["query_id"], []).append(r["neighbor_id"])
-    truth = {b: {v for v, bb in copy_of.items() if bb == b} for b in range(20)}
-    hits = sum(len(set(by_q.get(q, [])) & t) for q, t in truth.items())
-    total = sum(len(t) for t in truth.values())
-    assert hits / total >= 0.95, f"recall {hits}/{total}"
-    for r in out:  # planted copies are near-identical
-        if r["neighbor_id"] in copy_of and copy_of[r["neighbor_id"]] == r["query_id"]:
-            assert r["cos"] > 0.999
-
-
 def test_ann_ivf_recall(spark):
     """IVF-flat: a query's planted near-identical copies share its centroid
     assignment, so recall@copies stays high at nlist=16, nprobe=4."""
@@ -70,15 +48,16 @@ def test_ann_ivf_recall(spark):
     assert hits / total >= 0.95, f"recall {hits}/{total}"
 
 
-def test_cosine_neardup_pairs_recall(spark):
+@pytest.mark.parametrize("n_planes", [16, 24])
+def test_cosine_neardup_pairs_recall(spark, n_planes):
     """The embedding near-dup self-join finds every planted near-identical
-    pair (cos >= 0.99) at 16 planes + radius-2 multiprobe, and emits no
-    below-threshold pair."""
+    pair (cos >= 0.99) at 16 AND 24 planes + radius-2 multiprobe, and emits
+    no below-threshold pair."""
     from deduplicator_spark.operators.ann import cosine_neardup_pairs
 
     emb, copy_of = _clustered_embeddings(spark)
     out = cosine_neardup_pairs(emb, dim=32, threshold=0.99,
-                               n_planes=16, probe_radius=2).collect()
+                               n_planes=n_planes, probe_radius=2).collect()
     got = {(r["id_a"], r["id_b"]) for r in out}
     # planted truth: base<->copy and copy<->copy within each base group
     groups = {}
@@ -93,107 +72,24 @@ def test_cosine_neardup_pairs_recall(spark):
     assert all(r["cos"] >= 0.99 for r in out)
 
 
-def test_ann_bucket_cap_bounds_candidates(spark):
-    """bucket_cap keeps mega-buckets bounded: with a cap of 3, no query can
-    score more than cap * n_probed_buckets candidates, and the output stays
-    deterministic (smallest ids win the cap)."""
-    from deduplicator_spark.operators.ann import ann_topk_lsh
+def test_cosine_neardup_pairs_bucket_cap(spark):
+    """bucket_cap bounds the build side of one mega-bucket (smallest ids
+    win), while the uncapped probe side still pairs every member with the
+    survivors: 60 identical vectors at cap 3 give exactly the 174 pairs
+    with an endpoint in {0, 1, 2} (uncapped: 1,770), covering all 60 ids."""
+    from deduplicator_spark.operators.ann import cosine_neardup_pairs
 
-    # 60 identical vectors -> one mega-bucket
     v = [1.0] + [0.0] * 15
     emb = spark.createDataFrame([(i, v) for i in range(60)],
                                 "vec_id long, embedding array<double>")
-    out = ann_topk_lsh(emb, dim=16, k=50, n_queries=1, n_planes=8,
-                       probe_radius=0, bucket_cap=3).collect()
-    ids = sorted(r["neighbor_id"] for r in out)
-    assert ids == [1, 2]  # cap keeps vec_ids 0,1,2; query 0 excluded itself
-
-
-def test_ann_ivfpq_recall_and_compression(spark):
-    """IVF-PQ: planted near-identical copies share the query's centroid and
-    (nearly) its residual, so their ADC distances beat background candidates
-    and recall@copies stays high even though the candidate scan only touches
-    nsub-int codes. Also pins the compression contract: the encoded database
-    is exactly nsub rows of small ints per vector."""
-    from deduplicator_spark.operators.ann import ann_topk_ivfpq
-
-    emb, copy_of = _clustered_embeddings(spark)
-    out = ann_topk_ivfpq(emb, dim=32, k=4, n_queries=20,
-                         nlist=16, nprobe=4, nsub=4, ksub=16).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["query_id"], []).append(r["neighbor_id"])
-        assert r["adist"] >= 0
-    truth = {b: {v for v, bb in copy_of.items() if bb == b} for b in range(20)}
-    hits = sum(len(set(by_q.get(q, [])) & t) for q, t in truth.items())
-    total = sum(len(t) for t in truth.values())
-    assert hits / total >= 0.9, f"recall {hits}/{total}"
-
-
-def test_ann_ivfpq_partitioning_invariant(spark):
-    """Same rows regardless of input partitioning — the argmin/tie-break
-    chain is fully deterministic (O10)."""
-    from deduplicator_spark.operators.ann import ann_topk_ivfpq
-
-    emb, _ = _clustered_embeddings(spark)
-    a = sorted(map(tuple, ann_topk_ivfpq(emb, dim=32, k=3, n_queries=8).collect()))
-    b = sorted(map(tuple, ann_topk_ivfpq(emb.repartition(17), dim=32, k=3,
-                                         n_queries=8).collect()))
-    assert a == b and len(a) > 0
-
-
-def test_ann_ivfpq_rerank_restores_recall(spark):
-    """The refine step (exact cosine over top-R ADC candidates) repairs the
-    non-monotone-recall failure mode of raw ADC ranking at high nprobe
-    (BENCH/ANN_RECALL.md): with rerank on, recall at nprobe=8 is at least as
-    good as at nprobe=4, and high in absolute terms."""
-    from deduplicator_spark.operators.ann import ann_topk_ivfpq
-
-    emb, copy_of = _clustered_embeddings(spark)
-    truth = {b: {v for v, bb in copy_of.items() if bb == b} for b in range(20)}
-    total = sum(len(t) for t in truth.values())
-
-    def recall(nprobe):
-        out = ann_topk_ivfpq(emb, dim=32, k=4, n_queries=20, nlist=16,
-                             nprobe=nprobe, nsub=4, ksub=16,
-                             rerank=24).collect()
-        by_q = {}
-        for r in out:
-            by_q.setdefault(r["query_id"], []).append(r["neighbor_id"])
-            assert -1.0 <= r["cos"] <= 1.0
-        return sum(len(set(by_q.get(q, [])) & t) for q, t in truth.items()) / total
-
-    r4, r8 = recall(4), recall(8)
-    assert r8 >= r4 >= 0.9, f"rerank recall nprobe4={r4:.3f} nprobe8={r8:.3f}"
-
-
-def test_alignment_filter_threshold_boundary(spark):
-    """CLIP-score gate: identical pair keeps, orthogonal drops, and the
-    decision at the threshold is made on the ROUNDED score (exactly-0.9
-    keeps; 0.8999994 rounds to 0.899999 and drops; 0.8999996 rounds to
-    0.9 and keeps) — the cross-engine reproducibility contract."""
-    import math
-
-    from deduplicator_spark.operators.ann import alignment_filter
-
-    def caption_with_cos(c):
-        return [c, math.sqrt(1.0 - c * c)]
-
-    rows = [
-        ("identical", [1.0, 0.0], [1.0, 0.0]),
-        ("orthogonal", [1.0, 0.0], [0.0, 1.0]),
-        ("at_threshold", [1.0, 0.0], caption_with_cos(0.9)),
-        ("just_below", [1.0, 0.0], caption_with_cos(0.8999994)),
-        ("rounds_up", [1.0, 0.0], caption_with_cos(0.8999996)),
-    ]
-    df = spark.createDataFrame(
-        rows, "item_id string, image_v array<double>, caption_v array<double>")
-    out = {r["item_id"]: r for r in alignment_filter(df, threshold=0.9).collect()}
-    assert out["identical"]["keep"] and out["identical"]["alignment"] == 1.0
-    assert not out["orthogonal"]["keep"] and out["orthogonal"]["alignment"] == 0.0
-    assert out["at_threshold"]["keep"]
-    assert not out["just_below"]["keep"]
-    assert out["rounds_up"]["keep"] and out["rounds_up"]["alignment"] == 0.9
+    out = cosine_neardup_pairs(emb, dim=16, threshold=0.99, n_planes=8,
+                               probe_radius=0, bucket_cap=3).collect()
+    got = sorted((r["id_a"], r["id_b"]) for r in out)
+    want = sorted((a, b) for a in range(60) for b in range(a + 1, 60)
+                  if a <= 2)
+    assert len(want) == 174
+    assert got == want
+    assert {i for p in got for i in p} == set(range(60))
 
 
 def test_ann_index_lifecycle_roundtrip(spark, tmp_path):

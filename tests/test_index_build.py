@@ -23,6 +23,9 @@ CANON_VECTORS = [
     ("http://a.com/deep/path///", "http://a.com/deep/path"),
     ("http://a.com/x?", "http://a.com/x"),
     ("http://a.com/clean?a=1", "http://a.com/clean?a=1"),  # untouched
+    ("http://a.org:80?", "http://a.org"),
+    ("https://a.org:443?#f", "https://a.org"),
+    ("http://a.org:80?b=1", "http://a.org?b=1"),
 ]
 
 
@@ -31,6 +34,15 @@ def test_canonicalize_url_vectors(spark):
     got = [r["c"] for r in
            df.select(canonicalize_url(F.col("url")).alias("c")).collect()]
     assert got == [want for _, want in CANON_VECTORS]
+
+
+def test_canonicalize_url_expression_stays_linear(spark):
+    """Each stage binds its input once, so composing the canonicalizer adds
+    one copy of the chain instead of multiplying it."""
+    one = len(str(canonicalize_url(F.col("url"))))
+    nested = len(str(canonicalize_url(canonicalize_url(F.col("url")))))
+    assert one < 10_000
+    assert nested <= 3 * one
 
 
 def test_canonicalizer_is_injectable(spark):

@@ -191,7 +191,8 @@ def test_shingles_and_simhash_basics(spark):
 def test_simhash_feature_parity(spark):
     """The vectorized Arrow pass (simhash_features, md5_hash=True) must equal
     the Column-algebra simhash64 with the same md5-derived feature hash —
-    bit-for-bit, including the whitespace/empty-text edge cases."""
+    bit-for-bit, including the whitespace/empty-text edge cases. Text with
+    no tokens (null, empty, blank) gets a null simhash on both sides."""
     from deduplicator_spark.operators.simhash import simhash_features
 
     rows = [
@@ -204,6 +205,8 @@ def test_simhash_feature_parity(spark):
         # NBSP + thin space: Unicode whitespace the JVM's ASCII-only \s+
         # does NOT split on — pins the re.ASCII flag in the Arrow tokenizer
         (7, "foo bar baz qux quux"),
+        (8, None),
+        (9, "   "),
     ]
     df = spark.createDataFrame(rows, "item_id long, text string")
     md5h = lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
@@ -218,6 +221,7 @@ def test_simhash_feature_parity(spark):
         for r in simhash_features(df, md5_hash=True).collect()
     }
     assert arrow_side == col_side
+    assert arrow_side[4] is None and arrow_side[8] is None and arrow_side[9] is None
     assert arrow_side[1] == arrow_side[6]  # identical text -> identical simhash
     assert arrow_side[1] != arrow_side[2]
     # default (pd.util.hash_array) path: deterministic, full 64-bit range
