@@ -18,8 +18,9 @@ Sandbox usage (local[N] — same code path):
 Subcommands:
     synth   write a deterministic synthetic image+caption corpus
     run     end-to-end dedup: tiers -> verify -> cluster -> verdicts(+metrics)
-            (--checkpoint-dir makes it resumable; --resume reuses committed
-            stages from a previous, possibly killed, run)
+            (--checkpoint-dir commits every stage; --resume reuses the
+            stages a previous, possibly killed, run committed, each only
+            when the config, --tiers, --no-verify and the input all match)
     index   the reference's IndexingLauncher analog: read captures from any
             registered source (crawl_log / warc / parquet), run the composed
             §3.1 build (gates -> revisit projection -> canonicalize ->
@@ -62,7 +63,6 @@ def cmd_synth(args) -> int:
 
 
 def cmd_run(args) -> int:
-    from .plans.checkpoint import run_pipeline_resumable
     from .plans.pipeline import run_pipeline
     from .synth import synthesize_images
 
@@ -89,16 +89,11 @@ def cmd_run(args) -> int:
     n = images.count()
 
     t0 = time.perf_counter()
-    if args.checkpoint_dir:
-        if not args.resume:
-            shutil.rmtree(args.checkpoint_dir, ignore_errors=True)
-        result = run_pipeline_resumable(
-            images, args.checkpoint_dir, tiers=tiers,
-            verify_pixels=not args.no_verify, run_id=args.run_id,
-        )
-    else:
-        result = run_pipeline(images, tiers=tiers, verify_pixels=not args.no_verify,
-                              run_id=args.run_id, persist_input=persist)
+    if args.checkpoint_dir and not args.resume:
+        shutil.rmtree(args.checkpoint_dir, ignore_errors=True)
+    result = run_pipeline(images, tiers=tiers, verify_pixels=not args.no_verify,
+                          run_id=args.run_id, persist_input=persist,
+                          checkpoint_dir=args.checkpoint_dir)
     if args.output:
         result.verdicts.write.mode("overwrite").parquet(f"{args.output}/verdicts")
         result.clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
@@ -283,7 +278,9 @@ def main(argv: list[str] | None = None) -> int:
     pr.add_argument("--output", help="directory for verdicts/clusters/metrics parquet")
     pr.add_argument("--checkpoint-dir", help="stage checkpoint root (enables resume)")
     pr.add_argument("--resume", action="store_true",
-                    help="reuse committed stages in --checkpoint-dir")
+                    help="reuse the stages committed in --checkpoint-dir; a "
+                         "stage is reused only when the config, --tiers, "
+                         "--no-verify and the input all match")
     pr.add_argument("--tiers", default="exact,near_image,near_caption,containment")
     pr.add_argument("--no-verify", action="store_true", help="skip pixel PSNR verification")
     pr.add_argument("--warmup", type=int, default=0, metavar="N",

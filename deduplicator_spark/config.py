@@ -83,3 +83,6 @@ class DedupConfig:
 
 
 DEFAULT = DedupConfig()
+
+# the four similarity tiers a default run enables (plans/pipeline.py)
+TIERS = ("exact", "near_image", "near_caption", "containment")

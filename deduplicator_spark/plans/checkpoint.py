@@ -1,4 +1,4 @@
-"""Stage-level checkpointing: resumable pipeline + per-partition lineage.
+"""Stage-level checkpoint store: parquet commits + per-partition lineage.
 
 North-rule requirement: "resumable from Iceberg-snapshot checkpoints with
 per-partition lineage and metrics tables". In production each stage commits
@@ -14,12 +14,13 @@ manifest per stage:
     <root>/_lineage/<stage>/*.parquet  per-partition lineage (partition id,
                                        rows, bytes-ish) captured at write time
 
-Resume rule: a stage re-runs unless its manifest exists AND its config
-fingerprint matches the current DedupConfig AND its input identity token
-matches the current input — a changed shingle size, band count, or swapped
-input corpus silently invalidates every downstream checkpoint (SURVEY.md
-§7.4 hard part #4; the Iceberg analog is pinning the source snapshot id in
-the stage metadata).
+plans/pipeline.run_pipeline(checkpoint_dir=...) commits each of its stages
+here. Resume rule: a stage re-runs unless its manifest exists AND its
+fingerprint matches the current DedupConfig, tiers and pixel verification
+AND its input identity token matches the current input — a changed shingle
+size, band count, tier list or swapped input corpus silently invalidates
+every downstream checkpoint (SURVEY.md §7.4 hard part #4; the Iceberg analog
+is pinning the source snapshot id in the stage metadata).
 """
 
 from __future__ import annotations
@@ -33,35 +34,37 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT, DedupConfig
+from ..config import DEFAULT, TIERS, DedupConfig
 
 
-def config_fingerprint(cfg: DedupConfig) -> str:
-    payload = json.dumps(dataclasses.asdict(cfg), sort_keys=True)
+def config_fingerprint(cfg: DedupConfig, tiers: tuple[str, ...] = TIERS,
+                       verify_pixels: bool = True) -> str:
+    """Hash of every run argument that changes a stage's output: the
+    config, the enabled tiers and whether near-image pairs are
+    pixel-verified."""
+    payload = json.dumps({"cfg": dataclasses.asdict(cfg),
+                          "tiers": sorted(tiers),
+                          "verify_pixels": verify_pixels}, sort_keys=True)
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
 
 _CONTENT_COLS = ("digest", "phash", "caption")  # cheap content-bearing cols
 
 
-def input_identity(images: DataFrame, id_col: str = "image_id",
-                   content_col: str | None = None) -> str:
+def input_identity(images: DataFrame) -> str:
     """Cheap content identity of the input: (row count, order-invariant
-    checksum over id + a content-bearing column) from one column-pruned agg
-    job — the parquet stand-in for an Iceberg source snapshot id pinned into
-    stage metadata.
+    checksum over image_id + every present content-bearing column) from one
+    column-pruned agg job — the parquet stand-in for an Iceberg source
+    snapshot id pinned into stage metadata.
 
-    The checksum folds in ``content_col`` (default: the first of
-    digest/phash/caption present) so a regenerated corpus with the same ids but
-    different payloads/captions invalidates checkpoints, honoring the
-    'changed input invalidates checkpoints' contract. Deliberately NOT the
-    raw bytes column — hashing 100 TB of payloads to decide cache validity
-    would cost more than the pipeline; phash/digest are payload-derived."""
-    if content_col is None:
-        content_col = next((c for c in _CONTENT_COLS if c in images.columns), None)
-    cols = [F.col(id_col).cast("string")]
-    if content_col is not None:
-        cols.append(F.col(content_col).cast("string"))
+    The checksum folds in each of digest/phash/caption the input carries, so
+    a regenerated corpus with the same ids but different payloads or edited
+    captions invalidates checkpoints, honoring the 'changed input
+    invalidates checkpoints' contract. Deliberately NOT the raw bytes column
+    — hashing 100 TB of payloads to decide cache validity would cost more
+    than the pipeline; phash/digest are payload-derived."""
+    cols = [F.col("image_id").cast("string")] + [
+        F.col(c).cast("string") for c in _CONTENT_COLS if c in images.columns]
     row = images.agg(
         F.count("*").alias("n"),
         F.sum(F.xxhash64(F.concat_ws("\x1f", *cols))
@@ -75,12 +78,13 @@ class StageStore:
 
     def __init__(self, spark: SparkSession, root: str,
                  cfg: DedupConfig = DEFAULT, run_id: str = "run",
-                 input_token: str | None = None) -> None:
+                 input_token: str | None = None,
+                 tiers: tuple[str, ...] = TIERS,
+                 verify_pixels: bool = True) -> None:
         self.spark = spark
         self.root = root
-        self.cfg = cfg
         self.run_id = run_id
-        self.fingerprint = config_fingerprint(cfg)
+        self.fingerprint = config_fingerprint(cfg, tiers, verify_pixels)
         self.input_token = input_token
 
     def _dir(self, stage: str) -> str:
@@ -90,8 +94,9 @@ class StageStore:
         return os.path.join(self._dir(stage), "manifest.json")
 
     def has(self, stage: str) -> bool:
-        """True iff the stage committed under the SAME config fingerprint
-        (and, when this store knows its input, the SAME input identity)."""
+        """True iff the stage committed under the SAME fingerprint (config,
+        tiers, pixel verification) and, when this store knows its input,
+        the SAME input identity."""
         try:
             with open(self._manifest(stage)) as f:
                 m = json.load(f)
@@ -201,88 +206,3 @@ class StageStore:
     def lineage(self) -> DataFrame:
         return self.spark.read.option("basePath", os.path.join(self.root, "_lineage")) \
             .parquet(os.path.join(self.root, "_lineage", "*"))
-
-
-def run_pipeline_resumable(
-    images: DataFrame,
-    root: str,
-    cfg: DedupConfig = DEFAULT,
-    tiers: tuple[str, ...] = ("exact", "near_image", "near_caption", "containment"),
-    verify_pixels: bool = True,
-    run_id: str = "run",
-    stop_after: str | None = None,
-):
-    """Checkpointed variant of plans.pipeline.run_pipeline.
-
-    Stages: validate -> edges -> clusters -> verdicts -> metrics. Each
-    commits to the StageStore; on restart, committed stages (same config
-    fingerprint AND same input identity) are read back instead of
-    recomputed. The validate stage commits the fused digest+quarantine
-    features, so the resumable path applies the SAME payload validation as
-    run_pipeline and resume stays deterministic across a kill between
-    validation and edge generation. ``stop_after`` simulates a mid-job kill
-    for resume tests (returns None after committing that stage).
-    """
-    from ..operators.candidates import canonical_pairs
-    from ..operators.components import connected_components
-    from .pipeline import (
-        DedupResult,
-        bad_ids_from_features,
-        build_metrics,
-        candidate_edges,
-        validation_features,
-        verdicts_from_clusters,
-    )
-
-    spark = images.sparkSession
-    store = StageStore(spark, root, cfg, run_id,
-                       input_token=input_identity(images))
-
-    if store.has("validate"):
-        feats = store.read("validate")
-    else:
-        feats = store.write("validate", validation_features(images))
-    if stop_after == "validate":
-        return None
-    bad = bad_ids_from_features(feats, cfg)
-    images = images.join(F.broadcast(bad), "image_id", "left_anti")
-    digests = feats.join(F.broadcast(bad), "image_id", "left_anti") \
-        .select("image_id", "digest")
-
-    if store.has("edges"):
-        edges = store.read("edges")
-    else:
-        edges = store.write(
-            "edges",
-            candidate_edges(images, cfg, tiers, verify_pixels, digests=digests),
-        )
-    if stop_after == "edges":
-        return None
-
-    if store.has("clusters"):
-        clusters = store.read("clusters")
-    else:
-        clusters = store.write(
-            "clusters",
-            connected_components(canonical_pairs(edges),
-                                 nodes=images.select("image_id"), cfg=cfg),
-        )
-    if stop_after == "clusters":
-        return None
-
-    if store.has("verdicts"):
-        verdicts = store.read("verdicts")
-    else:
-        verdicts = store.write("verdicts", verdicts_from_clusters(images, clusters, edges))
-    if stop_after == "verdicts":
-        return None
-
-    if store.has("metrics"):
-        metrics = store.read("metrics")
-    else:
-        metrics = store.write(
-            "metrics",
-            build_metrics(run_id, images, edges, verdicts, quarantined=bad),
-        )
-
-    return DedupResult(pairs=edges, clusters=clusters, verdicts=verdicts, metrics=metrics)

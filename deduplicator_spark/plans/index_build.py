@@ -41,9 +41,6 @@ from ..operators.strategies import last_wins_upsert
 
 DEFAULT_MIME_FILTER = r"^text/.*"
 
-_CAPTURE_COLS = ("url", "digest", "ts", "record_id", "mime", "status",
-                 "revisit", "original_url", "original_ts")
-
 
 def normalize_captures(df: DataFrame) -> DataFrame:
     """Adapt any registered source's output (sources/warc.py,

@@ -21,7 +21,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT, DedupConfig
+from ..config import DEFAULT, TIERS, DedupConfig
 from ..operators.candidates import canonical_pairs
 from ..operators.components import connected_components
 from ..operators.containment import containment_pairs
@@ -29,6 +29,7 @@ from ..operators.exact import exact_pairs, exact_pairs_from_digests
 from ..operators.minhash import near_caption_pairs
 from ..operators.simhash import near_image_pairs
 from ..operators.verify import verify_image_pairs
+from .checkpoint import StageStore, input_identity
 
 TIER_PRIORITY = {"exact": 1, "near_image": 2, "near_caption": 3,
                  "containment": 4, "winnow": 5}
@@ -44,8 +45,7 @@ class DedupResult:
 
 
 def candidate_edges(images: DataFrame, cfg: DedupConfig = DEFAULT,
-                    tiers: tuple[str, ...] = ("exact", "near_image",
-                                              "near_caption", "containment"),
+                    tiers: tuple[str, ...] = TIERS,
                     verify_pixels: bool = True,
                     digests: DataFrame | None = None,
                     dedup_pairs: bool = True) -> DataFrame:
@@ -211,31 +211,55 @@ def build_metrics(run_id: str, images: DataFrame, edges: DataFrame,
 
 
 def run_pipeline(images: DataFrame, cfg: DedupConfig = DEFAULT,
-                 tiers: tuple[str, ...] = ("exact", "near_image",
-                                           "near_caption", "containment"),
+                 tiers: tuple[str, ...] = TIERS,
                  verify_pixels: bool = True,
                  run_id: str = "run",
-                 persist_input: bool = True) -> DedupResult:
-    """persist_input=True caches the full input (right for synthesized or
+                 persist_input: bool = True,
+                 checkpoint_dir: str | None = None) -> DedupResult:
+    """The five stages — validate -> edges -> clusters -> verdicts ->
+    metrics — composed once.
+
+    persist_input=True caches the full input (right for synthesized or
     expensive-to-recompute inputs at sandbox scale). For a parquet/Iceberg
     source pass False: each tier then scans only its pruned columns from
     storage; the payload bytes are read once up front (fused
     validation+digest pass) plus once per verified-candidate PSNR join —
     you cannot cache 100 TB of payload bytes, and the narrow caption/phash
-    projections the other tiers need are cached separately anyway."""
+    projections the other tiers need are cached separately anyway.
+
+    Without ``checkpoint_dir`` the validation features and the edges are
+    persisted and the rest stays lazy. With it, every stage commits to a
+    plans/checkpoint.StageStore under that directory in order, and a stage
+    whose manifest matches the config, ``tiers``, ``verify_pixels`` and the
+    input's identity token is read back instead of recomputed. A kill
+    leaves the stages committed before it (data + manifest) and at most a
+    manifest-less data directory for the stage in flight; the next run
+    with the same key reads the committed stages back and re-runs the
+    rest."""
     if persist_input:
         images = images.persist()
-    feats = validation_features(images).persist()
+    store = None if checkpoint_dir is None else StageStore(
+        images.sparkSession, checkpoint_dir, cfg, run_id,
+        input_token=input_identity(images), tiers=tiers,
+        verify_pixels=verify_pixels)
+
+    def stage(name: str, build, persist: bool = False) -> DataFrame:
+        if store is None:
+            return build().persist() if persist else build()
+        return store.read(name) if store.has(name) else store.write(name, build())
+
+    feats = stage("validate", lambda: validation_features(images), persist=True)
     bad = bad_ids_from_features(feats, cfg)
     # broadcast anti-join of the (tiny) bad set; no eager count needed
     images = images.join(F.broadcast(bad), "image_id", "left_anti")
     digests = feats.join(F.broadcast(bad), "image_id", "left_anti") \
         .select("image_id", "digest")
-    edges = candidate_edges(images, cfg, tiers, verify_pixels,
-                            digests=digests).persist()
-    clusters = connected_components(
-        canonical_pairs(edges), nodes=images.select("image_id"), cfg=cfg
-    )
-    verdicts = verdicts_from_clusters(images, clusters, edges)
-    metrics = build_metrics(run_id, images, edges, verdicts, quarantined=bad)
+    edges = stage("edges", lambda: candidate_edges(
+        images, cfg, tiers, verify_pixels, digests=digests), persist=True)
+    clusters = stage("clusters", lambda: connected_components(
+        canonical_pairs(edges), nodes=images.select("image_id"), cfg=cfg))
+    verdicts = stage("verdicts",
+                     lambda: verdicts_from_clusters(images, clusters, edges))
+    metrics = stage("metrics", lambda: build_metrics(
+        run_id, images, edges, verdicts, quarantined=bad))
     return DedupResult(pairs=edges, clusters=clusters, verdicts=verdicts, metrics=metrics)

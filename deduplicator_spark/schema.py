@@ -1,19 +1,19 @@
-"""Explicit StructTypes for every table the engine reads or writes.
+"""Explicit StructTypes for the synthetic corpus and the documented tables.
 
 The reference's schema is code-declared (IndexFields enum,
-deduplicator-commons/.../IndexFields.java:22-39) rather than inferred; we keep
-that property — every DataFrame boundary in this engine carries an explicit
-schema so Catalyst never has to infer and writers can't drift.
+deduplicator-commons/.../IndexFields.java:22-39) rather than inferred.
+synth.py builds its image corpus and planted truth pairs from
+IMAGES_SCHEMA and TRUTH_PAIRS_SCHEMA; INDEX_SCHEMA and VERDICTS_SCHEMA
+document the index rows (operators/strategies.py) and the pipeline's
+verdicts (plans/pipeline.DedupResult), which the plans build column by
+column.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     BooleanType,
-    DoubleType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -40,22 +40,6 @@ TRUTH_PAIRS_SCHEMA = StructType([
     StructField("positive", BooleanType(), False),
 ])
 
-# reference CrawlDataItem analog (CrawlDataItem.java:28-38), FIXTURES.md §2
-CAPTURES_SCHEMA = StructType([
-    StructField("url", StringType(), False),
-    StructField("url_canon", StringType(), True),
-    StructField("status", IntegerType(), False),
-    StructField("digest", StringType(), False),
-    StructField("ts", TimestampType(), False),
-    StructField("etag", StringType(), True),
-    StructField("mime", StringType(), True),
-    StructField("revisit", BooleanType(), False),
-    StructField("original_url", StringType(), True),
-    StructField("original_ts", TimestampType(), True),
-    StructField("record_id", StringType(), False),
-    StructField("bytes_len", LongType(), False),
-])
-
 # the persistent "index" (ref IndexFields.java:22-39 — URL, URL_CANONICALIZED,
 # DIGEST, DATE, ETAG, ORIGINAL_RECORD_ID)
 INDEX_SCHEMA = StructType([
@@ -67,35 +51,10 @@ INDEX_SCHEMA = StructType([
     StructField("record_id", StringType(), True),
 ])
 
-CANDIDATE_PAIRS_SCHEMA = StructType([
-    StructField("id_a", StringType(), False),
-    StructField("id_b", StringType(), False),
-    StructField("tier", StringType(), False),     # exact|near_image|near_caption|containment
-    StructField("score", DoubleType(), True),     # jaccard / psnr / containment ratio
-])
-
-CLUSTERS_SCHEMA = StructType([
-    StructField("image_id", StringType(), False),
-    StructField("cluster_id", StringType(), False),  # min image_id in component
-])
-
 VERDICTS_SCHEMA = StructType([
     StructField("image_id", StringType(), False),
     StructField("verdict", StringType(), False),      # novel | duplicate
     StructField("dup_class", StringType(), True),     # tier of the edge that linked it
     StructField("cluster_id", StringType(), False),
     StructField("refers_to_id", StringType(), True),  # cluster representative (K3 lineage)
-])
-
-METRICS_SCHEMA = StructType([
-    StructField("run_id", StringType(), False),
-    StructField("stage", StringType(), False),
-    StructField("metric", StringType(), False),
-    StructField("value", DoubleType(), False),
-])
-
-EMBEDDINGS_SCHEMA = StructType([
-    StructField("vec_id", LongType(), False),
-    StructField("embedding", ArrayType(FloatType()), False),
-    StructField("label", IntegerType(), True),
 ])

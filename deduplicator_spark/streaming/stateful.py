@@ -31,8 +31,6 @@ OUTPUT_SCHEMA = (
 )
 STATE_SCHEMA = "n long, first_id string, first_ts long"
 
-_US = 1_000_000  # state timestamps are epoch-microseconds (long)
-
 _DUR_US = {"microsecond": 1, "millisecond": 1000, "second": 1_000_000,
            "minute": 60_000_000, "hour": 3_600_000_000,
            "day": 86_400_000_000, "week": 604_800_000_000}
